@@ -1,5 +1,4 @@
 from crick_spark.operators.sketch_agg import (  # noqa: F401
-    SketchOps,
     merge_sketches,
     partial_sketches,
     sketch_aggregate,

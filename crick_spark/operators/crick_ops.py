@@ -14,7 +14,6 @@ yesterday's digests merge with today's partials without rescanning.
 
 from __future__ import annotations
 
-import pickle
 from typing import Callable
 
 import numpy as np
@@ -22,15 +21,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StructField,
     StructType,
 )
 
-from crick_spark.operators.sketch_agg import SketchOps, merge_sketches, partial_sketches, sketch_aggregate
-from crick_spark.sketches import Moments, SpaceSaving, TDigest
+from crick_spark.operators.sketch_agg import (
+    BLOB_SCHEMA,
+    merge_sketches,
+    partial_sketches,
+    sketch_aggregate,
+    to_blob,
+)
+from crick_spark.sketches import Moments, SpaceSaving, TDigest, codec
 
 
 def _qname(q: float) -> str:
@@ -44,14 +48,16 @@ def _xname(prefix: str, x: float) -> str:
 # ---------------------------------------------------------------------------
 # TDigest
 # ---------------------------------------------------------------------------
-def _tdigest_ops(col: str, weight_col: str | None, compression: float) -> SketchOps:
+def _tdigest_build(
+    col: str, weight_col: str | None, compression: float
+) -> Callable[[pd.DataFrame], TDigest]:
     def build(pdf: pd.DataFrame) -> TDigest:
         w = pdf[weight_col].to_numpy(np.float64) if weight_col else None
         return TDigest.from_values(
             pdf[col].to_numpy(np.float64), w, compression=compression
         )
 
-    return SketchOps(build=build, merge=lambda a, b: a.merge(b))
+    return build
 
 
 def tdigest_agg(
@@ -63,10 +69,10 @@ def tdigest_agg(
 ) -> DataFrame:
     """Aggregate to a digest column (by…, sketch: binary) — one row per
     group; the persistable/mergeable sketch state."""
-    by = by or []
-    ops = _tdigest_ops(col, weight_col, compression)
     cols = [col] + ([weight_col] if weight_col else [])
-    return partial_sketches(df, ops, cols, by)
+    return partial_sketches(
+        df, _tdigest_build(col, weight_col, compression), cols, by or []
+    )
 
 
 def tdigest_merge_finalize(
@@ -76,8 +82,7 @@ def tdigest_merge_finalize(
     result_schema: StructType,
 ) -> DataFrame:
     """Merge a (possibly persisted) digest-column DataFrame and finalize."""
-    ops = SketchOps(build=None, merge=lambda a, b: a.merge(b))
-    return merge_sketches(partials, ops, by or [], finalize, result_schema)
+    return merge_sketches(partials, by or [], finalize, result_schema)
 
 
 def tdigest_quantiles(
@@ -95,9 +100,9 @@ def tdigest_quantiles(
     def finalize(sk: TDigest) -> pd.DataFrame:
         return pd.DataFrame([{_qname(q): float(sk.quantile(q)) for q in qs}])
 
-    ops = _tdigest_ops(col, weight_col, compression)
+    build = _tdigest_build(col, weight_col, compression)
     cols = [col] + ([weight_col] if weight_col else [])
-    return sketch_aggregate(df, ops, cols, by, finalize, schema)
+    return sketch_aggregate(df, build, cols, by, finalize, schema)
 
 
 def tdigest_cdf(
@@ -118,7 +123,7 @@ def tdigest_cdf(
         )
 
     return sketch_aggregate(
-        df, _tdigest_ops(col, None, compression), [col], by, finalize, schema
+        df, _tdigest_build(col, None, compression), [col], by, finalize, schema
     )
 
 
@@ -154,7 +159,7 @@ def tdigest_histogram(
         )
 
     return sketch_aggregate(
-        df, _tdigest_ops(col, None, compression), [col], by, finalize, schema
+        df, _tdigest_build(col, None, compression), [col], by, finalize, schema
     )
 
 
@@ -186,8 +191,55 @@ def tdigest_centroids(
         )
 
     return sketch_aggregate(
-        df, _tdigest_ops(col, None, compression), [col], by, finalize, schema
+        df, _tdigest_build(col, None, compression), [col], by, finalize, schema
     )
+
+
+def _decayed_aggregate(
+    df: DataFrame,
+    build: Callable[[pd.DataFrame], object],
+    value_cols: list[str],
+    ts_col: str,
+    by: list[str],
+    half_life_days: float,
+    finalize: Callable[[object], pd.DataFrame],
+    result_schema: StructType,
+) -> DataFrame:
+    """Per-day partials, each scaled by ``0.5^(age_days/half_life)``, then
+    the ordinary ``merge_sketches`` over ``by``.  Works for any kernel
+    whose ``scale`` is linear in its weights/counts, so scaling partials
+    before the merge equals scaling the merged day-sketch."""
+    from pyspark.sql.window import Window
+
+    partials = partial_sketches(
+        df.withColumn("__day__", F.to_date(F.col(ts_col))),
+        build,
+        value_cols,
+        by + ["__day__"],
+    )
+    # reference day = global max day, computed IN-PLAN over the tiny
+    # partials relation (groups × days rows) via an unpartitioned window —
+    # no driver .collect(), no second scan of the fact table.  The
+    # single-partition shuffle is bounded by the partial count, not rows.
+    partials = partials.withColumn(
+        "__ref_day__", F.max("__day__").over(Window.partitionBy(F.lit(1)))
+    )
+    hl = float(half_life_days)
+
+    def scale(batches):
+        for pdf in batches:
+            ages = [(r - d).days for r, d in zip(pdf["__ref_day__"], pdf["__day__"])]
+            yield pdf[by].assign(
+                sketch=[
+                    codec.dumps(codec.loads(b).scale(0.5 ** (age / hl)))
+                    for b, age in zip(pdf["sketch"], ages)
+                ]
+            )
+
+    scaled = partials.mapInPandas(
+        scale, schema=StructType([partials.schema[k] for k in by + ["sketch"]])
+    )
+    return merge_sketches(scaled, by, finalize, result_schema)
 
 
 def tdigest_decayed_quantiles(
@@ -209,67 +261,41 @@ def tdigest_decayed_quantiles(
     before the merge equals scaling the merged day-digest — the
     decay composes with the two-phase distributed aggregation unchanged.
     Emits (by…, decayed_n, p…)."""
-    from pyspark.sql.window import Window
-
-    by = by or []
-    day = F.to_date(F.col(ts_col))
-    partials = tdigest_agg(
-        df.withColumn("__day__", day), col, by=by + ["__day__"], compression=compression
-    )
-    # reference day = global max day, computed IN-PLAN over the tiny
-    # partials relation (groups × days rows) via an unpartitioned window —
-    # no driver .collect(), no second scan of the fact table.  The
-    # single-partition shuffle is bounded by the partial count, not rows.
-    partials = partials.withColumn(
-        "__ref_day__", F.max("__day__").over(Window.partitionBy(F.lit(1)))
-    )
     schema = StructType(
         [StructField("decayed_n", DoubleType())]
         + [StructField(_qname(q), DoubleType()) for q in qs]
     )
-    out_schema = StructType(
-        ([partials.schema[k] for k in by]) + list(schema.fields)
+
+    def finalize(sk: TDigest) -> pd.DataFrame:
+        row = {"decayed_n": float(sk.size())}
+        row.update({_qname(q): float(sk.quantile(q)) for q in qs})
+        return pd.DataFrame([row])
+
+    return _decayed_aggregate(
+        df,
+        _tdigest_build(col, None, compression),
+        [col],
+        ts_col,
+        by or [],
+        half_life_days,
+        finalize,
+        schema,
     )
-    hl = float(half_life_days)
-
-    def merge_decayed(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic fold order (cf. merge_sketches) → run-stable floats
-        pdf = pdf.assign(__blob__=pdf["sketch"].map(bytes)).sort_values(
-            ["__day__", "__blob__"], kind="stable"
-        )
-        merged = None
-        ref_day = pdf["__ref_day__"].iloc[0]
-        for _, r in pdf.iterrows():
-            age = (ref_day - r["__day__"]).days
-            sk = pickle.loads(bytes(r["sketch"])).scale(0.5 ** (age / hl))
-            merged = sk if merged is None else merged.merge(sk)
-        row = {"decayed_n": float(merged.size())}
-        for q in qs:
-            row[_qname(q)] = float(merged.quantile(q))
-        res = pd.DataFrame([row])
-        for i, k in enumerate(by):
-            res.insert(i, k, pdf[k].iloc[0])
-        return res
-
-    if by:
-        return partials.groupBy(*by).applyInPandas(merge_decayed, out_schema)
-    from crick_spark.operators.sketch_agg import GROUP_KEY
-    from pyspark.sql.types import IntegerType
-
-    grouped = partials.withColumn(GROUP_KEY, F.lit(1)).groupBy(GROUP_KEY)
-    out_g = StructType([StructField(GROUP_KEY, IntegerType())] + list(schema.fields))
-
-    def merge_global(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = merge_decayed(pdf)
-        res.insert(0, GROUP_KEY, 1)
-        return res
-
-    return grouped.applyInPandas(merge_global, out_g).drop(GROUP_KEY)
 
 
 # ---------------------------------------------------------------------------
 # SpaceSaving
 # ---------------------------------------------------------------------------
+def _spacesaving_build(
+    col: str, capacity: int, count_col: str | None
+) -> Callable[[pd.DataFrame], SpaceSaving]:
+    def build(pdf: pd.DataFrame) -> SpaceSaving:
+        counts = pdf[count_col].to_numpy(np.int64) if count_col else None
+        return SpaceSaving.from_batch(pdf[col].to_numpy(), counts, capacity=capacity)
+
+    return build
+
+
 def spacesaving_topk(
     df: DataFrame,
     col: str,
@@ -286,20 +312,13 @@ def spacesaving_topk(
         [item_field, StructField("cnt", LongType()), StructField("error", LongType())]
     )
 
-    def build(pdf: pd.DataFrame) -> SpaceSaving:
-        counts = pdf[count_col].to_numpy(np.int64) if count_col else None
-        return SpaceSaving.from_batch(
-            pdf[col].to_numpy(), counts, capacity=capacity
-        )
-
-    ops = SketchOps(build=build, merge=lambda a, b: a.merge(b))
-
     def finalize(sk: SpaceSaving) -> pd.DataFrame:
         rows = sk.topk(k)
         return pd.DataFrame(rows, columns=["item", "cnt", "error"])
 
+    build = _spacesaving_build(col, capacity, count_col)
     cols = [col] + ([count_col] if count_col else [])
-    return sketch_aggregate(df, ops, cols, by, finalize, schema)
+    return sketch_aggregate(df, build, cols, by, finalize, schema)
 
 
 def spacesaving_decayed_topk(
@@ -315,8 +334,8 @@ def spacesaving_decayed_topk(
     """Exponentially-decayed heavy hitters (round 6) — the SpaceSaving
     analog of ``tdigest_decayed_quantiles`` (crick ``TDigest.scale``,
     tdigest.pyx:326-340): per-day SpaceSaving partials, each scaled by
-    ``0.5^(age_days/half_life)`` at merge (count AND error scale — the
-    bound stays conservative), Cafaro-merged oldest-first, then top-k.
+    ``0.5^(age_days/half_life)`` before the merge (count AND error scale
+    — the bound stays conservative), Cafaro-merged, then top-k.
     Recent items dominate the ranking; stale ones fade instead of
     falling off a cliff.
 
@@ -327,72 +346,28 @@ def spacesaving_decayed_topk(
     groups × days sketch rows (KBs), the ref day comes from an in-plan
     window over that tiny relation, and only capacity-bounded counters
     ever reach the final fold."""
-    from pyspark.sql.window import Window
-
-    by = by or []
-    item_field = StructField("item", df.schema[col].dataType)
-    day = F.to_date(F.col(ts_col))
-
-    def build(pdf: pd.DataFrame) -> SpaceSaving:
-        counts = pdf[count_col].to_numpy(np.int64) if count_col else None
-        return SpaceSaving.from_batch(
-            pdf[col].to_numpy(), counts, capacity=capacity
-        )
-
-    ops = SketchOps(build=build, merge=lambda a, b: a.merge(b))
-    cols = [col] + ([count_col] if count_col else [])
-    partials = partial_sketches(
-        df.withColumn("__day__", day), ops, cols, by + ["__day__"]
-    )
-    partials = partials.withColumn(
-        "__ref_day__", F.max("__day__").over(Window.partitionBy(F.lit(1)))
-    )
     schema = StructType(
         [
-            item_field,
+            StructField("item", df.schema[col].dataType),
             StructField("decayed_cnt", DoubleType()),
             StructField("err_bound", DoubleType()),
         ]
     )
-    out_schema = StructType(
-        [partials.schema[kcol] for kcol in by] + list(schema.fields)
+
+    def finalize(sk: SpaceSaving) -> pd.DataFrame:
+        return pd.DataFrame(sk.topk(k), columns=["item", "decayed_cnt", "err_bound"])
+
+    cols = [col] + ([count_col] if count_col else [])
+    return _decayed_aggregate(
+        df,
+        _spacesaving_build(col, capacity, count_col),
+        cols,
+        ts_col,
+        by or [],
+        half_life_days,
+        finalize,
+        schema,
     )
-    hl = float(half_life_days)
-
-    def merge_decayed(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic fold order (cf. tdigest_decayed_quantiles)
-        pdf = pdf.assign(__blob__=pdf["sketch"].map(bytes)).sort_values(
-            ["__day__", "__blob__"], kind="stable"
-        )
-        merged = None
-        ref_day = pdf["__ref_day__"].iloc[0]
-        for _, r in pdf.iterrows():
-            age = (ref_day - r["__day__"]).days
-            sk = pickle.loads(bytes(r["sketch"])).scale(0.5 ** (age / hl))
-            merged = sk if merged is None else merged.merge(sk)
-        rows = merged.topk(k)
-        res = pd.DataFrame(rows, columns=["item", "decayed_cnt", "err_bound"])
-        for i, kname in enumerate(by):
-            res.insert(i, kname, pdf[kname].iloc[0])
-        return res
-
-    if by:
-        return partials.groupBy(*by).applyInPandas(merge_decayed, out_schema)
-    from pyspark.sql.types import IntegerType
-
-    from crick_spark.operators.sketch_agg import GROUP_KEY
-
-    grouped = partials.withColumn(GROUP_KEY, F.lit(1)).groupBy(GROUP_KEY)
-    out_g = StructType(
-        [StructField(GROUP_KEY, IntegerType())] + list(schema.fields)
-    )
-
-    def merge_global(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = merge_decayed(pdf)
-        res.insert(0, GROUP_KEY, 1)
-        return res
-
-    return grouped.applyInPandas(merge_global, out_g).drop(GROUP_KEY)
 
 
 # ---------------------------------------------------------------------------
@@ -422,19 +397,19 @@ def moments_agg(df: DataFrame, col: str, by: list[str] | None = None) -> DataFra
     def build(pdf: pd.DataFrame) -> Moments:
         return Moments.from_values(pdf[col].to_numpy(np.float64))
 
-    ops = SketchOps(build=build, merge=lambda a, b: a.merge(b))
-
     def finalize(sk: Moments) -> pd.DataFrame:
         return pd.DataFrame([sk.finalize()])
 
-    return sketch_aggregate(df, ops, [col], by, finalize, schema)
+    return sketch_aggregate(df, build, [col], by, finalize, schema)
 
 
 # ---------------------------------------------------------------------------
 # Count-Min Sketch (family extension — not in crick; same contract)
 # ---------------------------------------------------------------------------
-def _cms_ops(width: int, depth: int, count_col: str | None = None) -> SketchOps:
-    """Kernel adapter shared by every CMS entry point (the _tdigest_ops
+def _cms_build(
+    width: int, depth: int, count_col: str | None = None
+) -> Callable[[pd.DataFrame], "CountMinSketch"]:
+    """Build function shared by every CMS entry point (the _tdigest_build
     pattern): builds from the JVM-hashed ``__cms_key__`` column."""
     from crick_spark.sketches.cms import CountMinSketch
 
@@ -444,7 +419,7 @@ def _cms_ops(width: int, depth: int, count_col: str | None = None) -> SketchOps:
             pdf["__cms_key__"].to_numpy(np.int64), counts, width=width, depth=depth
         )
 
-    return SketchOps(build=build, merge=lambda a, b: a.merge(b))
+    return build
 
 
 def cms_frequencies(
@@ -483,7 +458,6 @@ def cms_frequencies(
     item_keys = np.array([r["key"] for r in hashed_items], dtype=np.int64)
 
     keyed = df.withColumn("__cms_key__", F.xxhash64(col))
-    ops = _cms_ops(width, depth, count_col)
 
     def finalize(sk: CountMinSketch) -> pd.DataFrame:
         ests = sk.query(item_keys)
@@ -493,7 +467,9 @@ def cms_frequencies(
         )
 
     cols = ["__cms_key__"] + ([count_col] if count_col else [])
-    return sketch_aggregate(keyed, ops, cols, by, finalize, schema)
+    return sketch_aggregate(
+        keyed, _cms_build(width, depth, count_col), cols, by, finalize, schema
+    )
 
 
 def cms_join_size(
@@ -526,8 +502,6 @@ def cms_join_size(
             StructField("err_bound", DoubleType()),
         ]
     )
-    blob_schema = StructType([StructField("sketch", BinaryType())])
-
     def side(df: DataFrame, col: str, tag: str) -> DataFrame:
         # NULLs never match an equi-join — hashing them (xxhash64(NULL)
         # is the constant 42) would add phantom NULLxNULL pairs the
@@ -537,30 +511,20 @@ def cms_join_size(
         keyed = df.where(F.col(col).isNotNull()).select(
             F.xxhash64(F.col(col).cast("string")).alias("__cms_key__")
         )
-        ops = _cms_ops(width, depth)
-        partials = partial_sketches(keyed, ops, ["__cms_key__"], [])
-        merged = merge_sketches(
-            partials,
-            ops,
-            [],
-            lambda sk: pd.DataFrame([{"sketch": pickle.dumps(sk)}]),
-            blob_schema,
+        partials = partial_sketches(
+            keyed, _cms_build(width, depth), ["__cms_key__"], []
         )
-        # An empty side (zero rows, or all-NULL key column) yields ZERO
-        # merged rows, which would annihilate the crossJoin below and
-        # return an empty frame instead of est_join_size=0.  Union a
-        # one-row EMPTY sketch (merge identity: all-zero table, n=0) and
-        # re-fold, so exactly one row always survives.
-        default = df.sparkSession.createDataFrame(
-            [(pickle.dumps(CountMinSketch(width=width, depth=depth)),)],
-            blob_schema,
+        # An empty side (zero rows, or all-NULL key column) has ZERO
+        # partials, which would merge to zero rows and annihilate the
+        # crossJoin below instead of giving est_join_size=0.  Union a
+        # one-row EMPTY sketch (merge identity: all-zero table, n=0) into
+        # the partials, so the one merge always emits exactly one row.
+        identity = df.sparkSession.createDataFrame(
+            [(codec.dumps(CountMinSketch(width=width, depth=depth)),)],
+            BLOB_SCHEMA,
         )
         merged = merge_sketches(
-            merged.unionByName(default),
-            SketchOps(build=None, merge=lambda a, b: a.merge(b)),
-            [],
-            lambda sk: pd.DataFrame([{"sketch": pickle.dumps(sk)}]),
-            blob_schema,
+            partials.unionByName(identity), [], to_blob, BLOB_SCHEMA
         )
         return merged.select(F.col("sketch").alias(f"__sk_{tag}__"))
 
@@ -570,8 +534,8 @@ def cms_join_size(
         for pdf in pdfs:
             rows = []
             for ba, bb in zip(pdf["__sk_a__"], pdf["__sk_b__"]):
-                a: CountMinSketch = pickle.loads(bytes(ba))
-                b: CountMinSketch = pickle.loads(bytes(bb))
+                a: CountMinSketch = codec.loads(ba)
+                b: CountMinSketch = codec.loads(bb)
                 rows.append(
                     {
                         "est_join_size": a.inner_product(b),
@@ -588,8 +552,8 @@ def cms_join_size(
 # ---------------------------------------------------------------------------
 # Bloom filter (family extension — not in crick; same contract)
 # ---------------------------------------------------------------------------
-def _bloom_ops(n_bits: int, n_hashes: int) -> SketchOps:
-    """Kernel adapter shared by every Bloom entry point (the _cms_ops
+def _bloom_build(n_bits: int, n_hashes: int) -> Callable[[pd.DataFrame], "BloomFilter"]:
+    """Build function shared by every Bloom entry point (the _cms_build
     pattern): builds from the JVM-hashed ``__bloom_key__`` column."""
     from crick_spark.sketches.bloom import BloomFilter
 
@@ -600,7 +564,7 @@ def _bloom_ops(n_bits: int, n_hashes: int) -> SketchOps:
             n_hashes=n_hashes,
         )
 
-    return SketchOps(build=build, merge=lambda a, b: a.merge(b))
+    return build
 
 
 def _bloom_key(df: DataFrame, col: str):
@@ -624,7 +588,7 @@ def _bloom_key(df: DataFrame, col: str):
 def bloom_build_bytes(
     df: DataFrame, col: str, n_bits: int = 1 << 20, n_hashes: int = 5
 ) -> bytes:
-    """Build ONE merged Bloom filter over ``df[col]`` and return its pickled
+    """Build ONE merged Bloom filter over ``df[col]`` and return its codec
     bytes — per-partition partial filters, bitwise-OR merge (exact, so the
     result is partition-invariant bit-for-bit), one-row driver fetch of
     n_bits/8 bytes (the bounded-collect pattern: the blob is the result,
@@ -632,28 +596,21 @@ def bloom_build_bytes(
     keyed = df.where(F.col(col).isNotNull()).select(
         _bloom_key(df, col).alias("__bloom_key__")
     )
-    ops = _bloom_ops(n_bits, n_hashes)
-    partials = partial_sketches(keyed, ops, ["__bloom_key__"], [])
-    blob_schema = StructType([StructField("sketch", BinaryType())])
-    merged = merge_sketches(
-        partials,
-        ops,
-        [],
-        lambda sk: pd.DataFrame([{"sketch": pickle.dumps(sk)}]),
-        blob_schema,
+    partials = partial_sketches(
+        keyed, _bloom_build(n_bits, n_hashes), ["__bloom_key__"], []
     )
-    rows = merged.collect()
+    rows = merge_sketches(partials, [], to_blob, BLOB_SCHEMA).collect()
     if not rows:  # empty / all-NULL build side: the empty filter
         from crick_spark.sketches.bloom import BloomFilter
 
-        return pickle.dumps(BloomFilter(n_bits=n_bits, n_hashes=n_hashes))
+        return codec.dumps(BloomFilter(n_bits=n_bits, n_hashes=n_hashes))
     return bytes(rows[0]["sketch"])
 
 
 def bloom_probe_column(blob: bytes, df: DataFrame, col: str):
-    """Boolean membership Column for ``df[col]`` against a pickled filter.
+    """Boolean membership Column for ``df[col]`` against an encoded filter.
 
-    Arrow-batched pandas_udf; the filter is unpickled ONCE per python
+    Arrow-batched pandas_udf; the filter is decoded ONCE per python
     worker (closure cache), then every batch is a vectorized numpy probe.
     The blob ships inside the task binary — broadcast once per stage by
     Spark, never per row.  No false negatives: a True-membership miss is
@@ -666,7 +623,7 @@ def bloom_probe_column(blob: bytes, df: DataFrame, col: str):
     def probe(keys: pd.Series) -> pd.Series:
         bf = cache.get("bf")
         if bf is None:
-            bf = cache["bf"] = pickle.loads(blob)
+            bf = cache["bf"] = codec.loads(blob)
         return pd.Series(bf.contains_batch(keys.to_numpy(np.int64)))
 
     return probe(_bloom_key(df, col))

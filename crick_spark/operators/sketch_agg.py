@@ -1,6 +1,6 @@
 """Generic two-phase sketch aggregation — the distributed crick lifecycle.
 
-The reference's intended multi-node flow is per-partition sketch → pickle →
+The reference's intended multi-node flow is per-partition sketch → encode →
 ship → merge (SURVEY §3.3, ``crick/tdigest.pyx:246-263`` etc.).  On Spark
 that maps to:
 
@@ -9,7 +9,14 @@ that maps to:
       shuffle.  Output: one row (group keys…, sketch bytes) per group per
       partition.
   stage 2 (reduce side): ``groupBy(keys).applyInPandas`` merges the ≤
-      #partitions sketch buffers per group and finalizes.
+      #partitions sketch buffers per group with the kernel's ``.merge`` and
+      finalizes.  With no keys, ``groupBy()`` plans one single-partition
+      exchange and yields no row for empty input.
+
+This module is the only implementation of that partial → shuffle → merge →
+finalize path: every operator, the persisted stores and the decayed forms
+go through ``partial_sketches``/``merge_sketches``.  Sketch bytes are
+always ``crick_spark.sketches.codec`` bytes.
 
 Shuffle volume is ``partitions × |groups per partition| × sketch size``
 (KBs), independent of row count — this is what makes the pattern hold at
@@ -21,25 +28,22 @@ module implements the two phases explicitly (SURVEY §7.3).
 
 from __future__ import annotations
 
-import pickle
-from dataclasses import dataclass
 from functools import reduce
 from typing import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
+from pyspark.sql.types import BinaryType, StructField, StructType
 
-GROUP_KEY = "__group__"
+from crick_spark.sketches import codec
+
+BLOB_SCHEMA = StructType([StructField("sketch", BinaryType())])
 
 
-@dataclass
-class SketchOps:
-    """Kernel adapter: build a sketch from a pandas batch, merge two."""
-
-    build: Callable[[pd.DataFrame], object]
-    merge: Callable[[object, object], object]
+def to_blob(sk) -> pd.DataFrame:
+    """Finalize that keeps the merged sketch itself: one encoded row
+    matching ``BLOB_SCHEMA``."""
+    return pd.DataFrame([{"sketch": codec.dumps(sk)}])
 
 
 def _key_fields(df: DataFrame, by: list[str]) -> list[StructField]:
@@ -47,9 +51,13 @@ def _key_fields(df: DataFrame, by: list[str]) -> list[StructField]:
 
 
 def partial_sketches(
-    df: DataFrame, ops: SketchOps, value_cols: list[str], by: list[str]
+    df: DataFrame,
+    build: Callable[[pd.DataFrame], object],
+    value_cols: list[str],
+    by: list[str],
 ) -> DataFrame:
-    """Stage 1: one pickled sketch per (partition, group)."""
+    """Stage 1: one encoded sketch per (partition, group); ``build`` turns
+    a pandas batch of one group into a sketch."""
     out_schema = StructType(
         _key_fields(df, by) + [StructField("sketch", BinaryType(), False)]
     )
@@ -58,17 +66,14 @@ def partial_sketches(
     def fold(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         acc: dict[tuple, object] = {}
         for pdf in batches:
-            if by:
-                for kt, g in pdf.groupby(by, dropna=False, sort=False):
-                    key = kt if isinstance(kt, tuple) else (kt,)
-                    sk = ops.build(g)
-                    acc[key] = ops.merge(acc[key], sk) if key in acc else sk
-            else:
-                sk = ops.build(pdf)
-                acc[()] = ops.merge(acc[()], sk) if () in acc else sk
+            groups = pdf.groupby(by, dropna=False, sort=False) if by else [((), pdf)]
+            for kt, g in groups:
+                key = kt if isinstance(kt, tuple) else (kt,)
+                sk = build(g)
+                acc[key] = acc[key].merge(sk) if key in acc else sk
         if acc:
             yield pd.DataFrame(
-                [(*key, pickle.dumps(sk)) for key, sk in acc.items()],
+                [(*key, codec.dumps(sk)) for key, sk in acc.items()],
                 columns=by + ["sketch"],
             )
 
@@ -77,44 +82,28 @@ def partial_sketches(
 
 def merge_sketches(
     partials: DataFrame,
-    ops: SketchOps,
     by: list[str],
     finalize: Callable[[object], pd.DataFrame],
     result_schema: StructType,
 ) -> DataFrame:
     """Stage 2: merge each group's buffers (deterministic byte-order fold so
     float results are run-stable) and finalize to result rows."""
-    key_fields = _key_fields(partials, by) if by else []
-    out_schema = StructType(key_fields + list(result_schema.fields))
+    out_schema = StructType(_key_fields(partials, by) + list(result_schema.fields))
 
     def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         blobs = sorted(pdf["sketch"].tolist())
-        sk = reduce(ops.merge, (pickle.loads(b) for b in blobs))
+        sk = reduce(lambda a, b: a.merge(b), map(codec.loads, blobs))
         res = finalize(sk)
         for i, k in enumerate(by):
             res.insert(i, k, pdf[k].iloc[0])
         return res
 
-    if by:
-        return partials.groupBy(*by).applyInPandas(merge_fn, schema=out_schema)
-    grouped = partials.withColumn(GROUP_KEY, F.lit(1)).groupBy(GROUP_KEY)
-    out_schema_g = StructType(
-        [StructField(GROUP_KEY, IntegerType())] + list(result_schema.fields)
-    )
-
-    def merge_fn_global(pdf: pd.DataFrame) -> pd.DataFrame:
-        blobs = sorted(pdf["sketch"].tolist())
-        sk = reduce(ops.merge, (pickle.loads(b) for b in blobs))
-        res = finalize(sk)
-        res.insert(0, GROUP_KEY, 1)
-        return res
-
-    return grouped.applyInPandas(merge_fn_global, schema=out_schema_g).drop(GROUP_KEY)
+    return partials.groupBy(*by).applyInPandas(merge_fn, schema=out_schema)
 
 
 def sketch_aggregate(
     df: DataFrame,
-    ops: SketchOps,
+    build: Callable[[pd.DataFrame], object],
     value_cols: list[str],
     by: list[str] | None,
     finalize: Callable[[object], pd.DataFrame],
@@ -122,5 +111,5 @@ def sketch_aggregate(
 ) -> DataFrame:
     """partial → shuffle buffers → merge/finalize, end to end."""
     by = by or []
-    partials = partial_sketches(df, ops, value_cols, by)
-    return merge_sketches(partials, ops, by, finalize, result_schema)
+    partials = partial_sketches(df, build, value_cols, by)
+    return merge_sketches(partials, by, finalize, result_schema)

@@ -674,28 +674,18 @@ SELECT event_type, item, cnt, CAST(0 AS BIGINT) AS error FROM (
 )
 def spacesaving_persist_roundtrip(spark, sf_dir):
 
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from crick_spark.operators.sketch_agg import (
-        SketchOps,
-        merge_sketches,
-        partial_sketches,
-    )
+    from crick_spark.operators.crick_ops import _spacesaving_build
+    from crick_spark.operators.sketch_agg import merge_sketches, partial_sketches
     from crick_spark.sketches import SpaceSaving
 
     ev = load_table(spark, sf_dir, "events")
     # exact regime at any SF: capacity >= |distinct users| (key-only scan)
     cap = max(1024, ev.select("user_id").distinct().count())
-
-    def build(pdf: pd.DataFrame) -> SpaceSaving:
-        return SpaceSaving.from_batch(
-            pdf["user_id"].to_numpy(np.int64), None, capacity=cap
-        )
-
-    ops = SketchOps(build=build, merge=lambda a, b: a.merge(b))
-    partials = partial_sketches(ev, ops, ["user_id"], ["event_type"])
+    build = _spacesaving_build("user_id", cap, None)
+    partials = partial_sketches(ev, build, ["user_id"], ["event_type"])
     path = run_tmpdir("crick_spsv_") + "/summaries.parquet"
     partials.write.mode("overwrite").parquet(path)
     restored = spark.read.parquet(path)
@@ -710,7 +700,7 @@ def spacesaving_persist_roundtrip(spark, sf_dir):
     def finalize(sk: SpaceSaving) -> pd.DataFrame:
         return pd.DataFrame(sk.topk(5), columns=["item", "cnt", "error"])
 
-    return merge_sketches(restored, ops, ["event_type"], finalize, schema)
+    return merge_sketches(restored, ["event_type"], finalize, schema)
 
 
 @register(
@@ -749,11 +739,7 @@ def moments_persist_roundtrip(spark, sf_dir):
     from pyspark.sql.types import StructField, StructType
 
     from crick_spark.operators.crick_ops import _MOMENTS_FIELDS
-    from crick_spark.operators.sketch_agg import (
-        SketchOps,
-        merge_sketches,
-        partial_sketches,
-    )
+    from crick_spark.operators.sketch_agg import merge_sketches, partial_sketches
     from crick_spark.sketches import Moments
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -761,8 +747,7 @@ def moments_persist_roundtrip(spark, sf_dir):
     def build(pdf: pd.DataFrame) -> Moments:
         return Moments.from_values(pdf["l_extendedprice"].to_numpy(np.float64))
 
-    ops = SketchOps(build=build, merge=lambda a, b: a.merge(b))
-    partials = partial_sketches(li, ops, ["l_extendedprice"], ["l_returnflag"])
+    partials = partial_sketches(li, build, ["l_extendedprice"], ["l_returnflag"])
     path = run_tmpdir("crick_moments_") + "/moments.parquet"
     partials.write.mode("overwrite").parquet(path)
     restored = spark.read.parquet(path)
@@ -771,7 +756,7 @@ def moments_persist_roundtrip(spark, sf_dir):
     def finalize(sk: Moments) -> pd.DataFrame:
         return pd.DataFrame([sk.finalize()])
 
-    out = merge_sketches(restored, ops, ["l_returnflag"], finalize, schema)
+    out = merge_sketches(restored, ["l_returnflag"], finalize, schema)
     return out.select(
         "l_returnflag",
         "cnt",
@@ -1300,19 +1285,18 @@ SELECT TRUE AS no_false_negatives,
     "SF-independent).  n_true_match pins the exact member-row count.",
 )
 def bloom_fpr_guarantee(spark, sf_dir):
-    import pickle as _pickle
-
     from crick_spark.operators.crick_ops import (
         bloom_build_bytes,
         bloom_probe_column,
     )
+    from crick_spark.sketches import codec
 
     lineitem = load_table(spark, sf_dir, "lineitem")
     urgent = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") == "1-URGENT"
     )
     blob = bloom_build_bytes(urgent, "o_orderkey", n_bits=1 << 16, n_hashes=5)
-    fpp_est = _pickle.loads(blob).fpp()
+    fpp_est = codec.loads(blob).fpp()
     bound = max(2.5 * fpp_est, 0.01)
 
     keys = urgent.select(F.col("o_orderkey").alias("__dim_key__")).distinct()

@@ -45,14 +45,12 @@ its streaming fold, exactly as sketch_store is tdigest's.
 from __future__ import annotations
 
 import os
-import pickle
 import uuid
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crick_spark.sketches import codec
 from crick_spark.sketches.bloom import BloomFilter
 from crick_spark.streaming.fsutil import local_meta_path
 
@@ -105,7 +103,7 @@ class BloomDedupStore:
             return -1, None
         bid, name = files[-1]
         t = pq.read_table(os.path.join(self._meta_local, name))
-        return bid, pickle.loads(t.column("content")[0].as_py())
+        return bid, codec.loads(t.column("content")[0].as_py())
 
     def _commit_meta(self, batch_id: int, bf: BloomFilter) -> None:
         import pyarrow as pa
@@ -116,7 +114,7 @@ class BloomDedupStore:
         table = pa.table(
             {
                 "batch_id": pa.array([int(batch_id)], pa.int64()),
-                "content": pa.array([pickle.dumps(bf)], pa.binary()),
+                "content": pa.array([codec.dumps(bf)], pa.binary()),
             }
         )
         tmp = os.path.join(self._meta_local, f".{name}.tmp")
@@ -156,23 +154,13 @@ class BloomDedupStore:
             .groupBy(self.key_col)
             .agg(F.count("*").alias("n_in_batch"))
         )
-        from crick_spark.operators.crick_ops import _bloom_key
+        from crick_spark.operators.crick_ops import (
+            bloom_build_bytes,
+            bloom_probe_column,
+        )
 
-        keyed = firsts.withColumn("__bk__", _bloom_key(firsts, self.key_col))
-        from pyspark.sql.types import BooleanType
-
-        blob = pickle.dumps(bf)
-        cache: dict = {}
-
-        @F.pandas_udf(BooleanType())
-        def seen(keys: pd.Series) -> pd.Series:
-            b = cache.get("bf")
-            if b is None:
-                b = cache["bf"] = pickle.loads(blob)
-            return pd.Series(b.contains_batch(keys.to_numpy(np.int64)))
-
-        survivors = keyed.where(~seen(F.col("__bk__")))
-        out = survivors.select(self.key_col, "n_in_batch")
+        seen = bloom_probe_column(codec.dumps(bf), firsts, self.key_col)
+        out = firsts.where(~seen).select(self.key_col, "n_in_batch")
         # Idempotent per-batch sink: each batch owns a Hive-style
         # partition directory it OVERWRITES, so a crash between this
         # write and the meta commit (which fences replays) makes the
@@ -187,9 +175,7 @@ class BloomDedupStore:
         # tiny parquet just written instead of re-running the firsts
         # shuffle.  Dropped keys need no fold: their bits are provably
         # already set (see module docstring).
-        from crick_spark.operators.crick_ops import bloom_build_bytes
-
-        batch_bf = pickle.loads(
+        batch_bf = codec.loads(
             bloom_build_bytes(
                 s.read.parquet(part), self.key_col, n_bits=self.n_bits,
                 n_hashes=self.n_hashes,

@@ -1,6 +1,6 @@
 """Sketches as custom streaming state — the crick-on-Spark streaming story.
 
-Each group key holds one pickled sketch in the state store
+Each group key holds one encoded sketch (``sketches.codec``) in the state store
 (``applyInPandasWithState``); every micro-batch folds its Arrow batches
 into the state sketch (crick ``update``), and emits the current finalized
 result (crick ``quantile``/``topk``).  State size is the sketch bound —
@@ -14,8 +14,7 @@ This is exactly the role crick plays inside dask's streaming reductions
 
 from __future__ import annotations
 
-import pickle
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Callable, Iterable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -29,9 +28,102 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from crick_spark.sketches import TDigest
+from crick_spark.operators.crick_ops import _qname
+from crick_spark.sketches import SpaceSaving, TDigest, codec
 
+# State value: the hex of the key's encoded sketch.
 STATE_SCHEMA = StructType([StructField("blob", StringType())])
+TOPK_SCHEMA = StructType(
+    [
+        StructField("key", StringType()),
+        StructField("rank", LongType()),
+        StructField("item", LongType()),
+        StructField("cnt", LongType()),
+        StructField("error", LongType()),
+    ]
+)
+
+
+def quantiles_schema(qs: Iterable[float]) -> StructType:
+    """(key, n, p…): what every streaming t-digest form emits."""
+    return StructType(
+        [StructField("key", StringType()), StructField("n", LongType())]
+        + [StructField(_qname(q), DoubleType()) for q in qs]
+    )
+
+
+def fold_tdigest(
+    state: str | None,
+    pdfs: Iterable[pd.DataFrame],
+    key: Any,
+    value_col: str,
+    qs: Iterable[float],
+    compression: float,
+) -> tuple[str, pd.DataFrame]:
+    """One key's micro-batch: fold ``pdfs`` into the state digest (a fresh
+    one when ``state`` is None); returns the new state value and the
+    (key, n, p…) row.  Shared by both state APIs."""
+    digest = (
+        codec.loads(bytes.fromhex(state))
+        if state is not None
+        else TDigest(compression=compression)
+    )
+    for pdf in pdfs:
+        digest = digest.merge(
+            TDigest.from_values(
+                pdf[value_col].to_numpy(np.float64), compression=compression
+            )
+        )
+    row = {"key": key, "n": int(digest.size())}
+    row.update({_qname(q): float(digest.quantile(q)) for q in qs})
+    return codec.dumps(digest).hex(), pd.DataFrame([row])
+
+
+def fold_spacesaving(
+    state: str | None,
+    pdfs: Iterable[pd.DataFrame],
+    key: Any,
+    item_col: str,
+    k: int,
+    capacity: int,
+) -> tuple[str, pd.DataFrame]:
+    """One key's micro-batch: fold ``pdfs`` into the state Space-Saving
+    summary; returns the new state value and the ``TOPK_SCHEMA`` rows.
+    Shared by both state APIs."""
+    sk = (
+        codec.loads(bytes.fromhex(state))
+        if state is not None
+        else SpaceSaving(capacity=capacity)
+    )
+    for pdf in pdfs:
+        sk.add_batch(pdf[item_col].to_numpy(np.int64))
+    top = sk.topk(k)
+    out = pd.DataFrame(
+        {
+            "key": [key] * len(top),
+            "rank": np.arange(1, len(top) + 1, dtype=np.int64),
+            "item": [t[0] for t in top],
+            "cnt": [t[1] for t in top],
+            "error": [t[2] for t in top],
+        }
+    )
+    return codec.dumps(sk).hex(), out
+
+
+def _group_state_update(fold: Callable[..., tuple[str, pd.DataFrame]], *args: Any):
+    """The ``applyInPandasWithState`` body around a ``fold_*``: read the
+    key's state, fold the batch, store the new state, emit."""
+
+    def update(
+        key: Tuple[Any, ...],
+        pdfs: Iterable[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        blob, out = fold(state.get[0] if state.exists else None, pdfs, key[0], *args)
+        state.update((blob,))
+        yield out
+
+    return update
 
 
 def tdigest_stream_quantiles(
@@ -44,43 +136,15 @@ def tdigest_stream_quantiles(
 ) -> DataFrame:
     """Per-key running t-digest over a stream; emits (key, n, p…) each
     micro-batch with the digest's lifetime-so-far estimates."""
-    out_fields = [
-        StructField("key", StringType()),
-        StructField("n", LongType()),
-    ] + [
-        StructField(f"p{str(q).replace('.', '_')}", DoubleType()) for q in qs
-    ]
-    out_schema = StructType(out_fields)
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            digest = pickle.loads(bytes.fromhex(state.get[0]))
-        else:
-            digest = TDigest(compression=compression)
-        for pdf in pdfs:
-            digest = digest.merge(
-                TDigest.from_values(
-                    pdf[value_col].to_numpy(np.float64), compression=compression
-                )
-            )
-        state.update((pickle.dumps(digest).hex(),))
-        row = {"key": key[0], "n": int(digest.size())}
-        for q in qs:
-            row[f"p{str(q).replace('.', '_')}"] = float(digest.quantile(q))
-        yield pd.DataFrame([row])
-
     src = events.withWatermark("ts", watermark) if watermark else events
     return src.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
+        _group_state_update(fold_tdigest, value_col, qs, compression),
+        outputStructType=quantiles_schema(qs),
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
 
 def spacesaving_stream_topk(
     events: DataFrame,
@@ -98,44 +162,9 @@ def spacesaving_stream_topk(
     Uses ``applyInPandasWithState``; the Spark 4.x port is
     ``spacesaving_stream_topk_tws`` below (ValueState instead of
     GroupState), gated on the protobuf runtime probe ``tws_available``."""
-    from crick_spark.sketches import SpaceSaving
-
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("rank", LongType()),
-            StructField("item", LongType()),
-            StructField("cnt", LongType()),
-            StructField("error", LongType()),
-        ]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            sk = pickle.loads(bytes.fromhex(state.get[0]))
-        else:
-            sk = SpaceSaving(capacity=capacity)
-        for pdf in pdfs:
-            sk.add_batch(pdf[item_col].to_numpy(np.int64))
-        state.update((pickle.dumps(sk).hex(),))
-        top = sk.topk(k)
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(top),
-                "rank": np.arange(1, len(top) + 1, dtype=np.int64),
-                "item": [t[0] for t in top],
-                "cnt": [t[1] for t in top],
-                "error": [t[2] for t in top],
-            }
-        )
-
     return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
+        _group_state_update(fold_spacesaving, item_col, k, capacity),
+        outputStructType=TOPK_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -184,47 +213,28 @@ def spacesaving_stream_topk_tws(
 
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    from crick_spark.sketches import SpaceSaving
-
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("rank", LongType()),
-            StructField("item", LongType()),
-            StructField("cnt", LongType()),
-            StructField("error", LongType()),
-        ]
-    )
-
     class TopKProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._state = handle.getValueState("summary", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._state.exists():
-                sk = pickle.loads(bytes.fromhex(self._state.get()[0]))
-            else:
-                sk = SpaceSaving(capacity=capacity)
-            for pdf in rows:
-                sk.add_batch(pdf[item_col].to_numpy(np.int64))
-            self._state.update((pickle.dumps(sk).hex(),))
-            top = sk.topk(k)
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(top),
-                    "rank": np.arange(1, len(top) + 1, dtype=np.int64),
-                    "item": [t[0] for t in top],
-                    "cnt": [t[1] for t in top],
-                    "error": [t[2] for t in top],
-                }
+            blob, out = fold_spacesaving(
+                self._state.get()[0] if self._state.exists() else None,
+                rows,
+                key[0],
+                item_col,
+                k,
+                capacity,
             )
+            self._state.update((blob,))
+            yield out
 
         def close(self) -> None:
             pass
 
     return events.groupBy(key_col).transformWithStateInPandas(
         TopKProcessor(),
-        outputStructType=out_schema,
+        outputStructType=TOPK_SCHEMA,
         outputMode="Update",
         timeMode="None",
     )

@@ -34,24 +34,14 @@ stores), exactly as ClusterStore and BloomDedupStore do.
 from __future__ import annotations
 
 import os
-import pickle
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
 
 from crick_spark.operators.crick_ops import tdigest_agg
-from crick_spark.operators.sketch_agg import SketchOps, merge_sketches
+from crick_spark.operators.sketch_agg import BLOB_SCHEMA, merge_sketches, to_blob
 from crick_spark.streaming.fsutil import local_meta_path
-
-_BLOB_SCHEMA = StructType([StructField("sketch", BinaryType())])
-_MERGE_OPS = SketchOps(build=None, merge=lambda a, b: a.merge(b))
-
-
-def _to_blob(sk) -> pd.DataFrame:
-    return pd.DataFrame([{"sketch": pickle.dumps(sk)}])
 
 
 class SketchStore:
@@ -168,9 +158,7 @@ class SketchStore:
         td_new = tdigest_agg(batch_df, self.value_col, by=td_by)
         if td_cur is not None:
             td_new = s.read.parquet(td_cur).unionByName(td_new)
-        compact = merge_sketches(
-            td_new, _MERGE_OPS, td_by, _to_blob, _BLOB_SCHEMA
-        )
+        compact = merge_sketches(td_new, td_by, to_blob, BLOB_SCHEMA)
         hll_new = batch_df.groupBy(*td_by).agg(
             F.hll_sketch_agg(self.key_col, F.lit(self.lg_k)).alias("hsk")
         )
@@ -206,29 +194,34 @@ class SketchStore:
         # job descriptions/groups are thread-local (InheritableThread
         # carries them over), failures propagate before the meta
         # commit, so crash semantics are unchanged: meta still commits
-        # last, after BOTH writes succeed.
+        # last, after BOTH writes succeed.  When both fail, the t-digest
+        # write's error is raised with the HLL write's as its cause, no
+        # matter which thread finished first.
         from pyspark import InheritableThread
 
         td_t = self._td_paths[flip]
         hll_t = self._hll_paths[flip]
-        errs: list[BaseException] = []
+        errs: list[BaseException | None] = [None, None]
 
-        def _write(df, path):
+        def _write(i, df, path):
             try:
                 df.write.mode("overwrite").parquet(path)
             except BaseException as e:  # re-raised on the caller thread
-                errs.append(e)
+                errs[i] = e
 
         threads = [
-            InheritableThread(target=_write, args=(compact, td_t)),
-            InheritableThread(target=_write, args=(hll_new, hll_t)),
+            InheritableThread(target=_write, args=(0, compact, td_t)),
+            InheritableThread(target=_write, args=(1, hll_new, hll_t)),
         ]
         for t in threads:
             t.start()
         for t in threads:
             t.join()
-        if errs:
-            raise errs[0]
+        td_err, hll_err = errs
+        if td_err is not None:
+            raise td_err from hll_err
+        if hll_err is not None:
+            raise hll_err
         # append-only commit marker, driver-written (meta protocol v2,
         # module docstring): atomic rename publishes the new generation;
         # the previous generation's file is never deleted, so a crash
@@ -245,11 +238,7 @@ class SketchStore:
         if td_final is None:
             raise ValueError("sketch store is empty: no committed batches")
         return merge_sketches(
-            spark.read.parquet(td_final),
-            _MERGE_OPS,
-            self.by,
-            finalize,
-            result_schema,
+            spark.read.parquet(td_final), self.by, finalize, result_schema
         )
 
     def hll_estimates(self, spark: SparkSession) -> DataFrame:

@@ -25,15 +25,15 @@ session/sketch semantics against batch recomputation
 (tests/test_streaming.py) — the only thing the skip leaves unexercised
 is Spark's own state transport.
 
-Reference parity: the state payload is the same pickled crick-semantics
+Reference parity: the state payload is the same encoded crick-semantics
 sketch the ``applyInPandasWithState`` forms carry (one TDigest /
-SpaceSaving per key, SURVEY §3.3); those forms stay the proven
+SpaceSaving per key, SURVEY §3.3), folded by the same
+``sketch_state.fold_*`` bodies; those forms stay the proven
 equivalence twins.
 """
 
 from __future__ import annotations
 
-import pickle
 from typing import Any, Iterable, Iterator
 
 import numpy as np
@@ -42,14 +42,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-from crick_spark.sketches import TDigest
-from crick_spark.streaming.sketch_state import STATE_SCHEMA, tws_available
+from crick_spark.streaming.sketch_state import (
+    STATE_SCHEMA,
+    fold_tdigest,
+    quantiles_schema,
+    tws_available,
+)
 
 SESSION_STATE_SCHEMA = StructType(
     [
@@ -166,7 +169,7 @@ class TDigestQuantilesProcessor(_Base):
     """Per-key running t-digest with state-store TTL eviction.
 
     Same fold/emit semantics as ``sketch_state.tdigest_stream_quantiles``
-    (the applyInPandasWithState twin): state is ONE pickled digest per
+    (the applyInPandasWithState twin): state is ONE encoded digest per
     key — ≤ 2·ceil(compression) centroids (crick/tdigest_stubs.c:65) —
     but idle keys are evicted by ``ttlDurationMs`` on the value state
     itself, no watermark required on the query.
@@ -192,22 +195,16 @@ class TDigestQuantilesProcessor(_Base):
     def handleInputRows(
         self, key: Any, rows: Iterable[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
-        if self._state.exists():
-            digest = pickle.loads(bytes.fromhex(self._state.get()[0]))
-        else:
-            digest = TDigest(compression=self.compression)
-        for pdf in rows:
-            digest = digest.merge(
-                TDigest.from_values(
-                    pdf[self.value_col].to_numpy(np.float64),
-                    compression=self.compression,
-                )
-            )
-        self._state.update((pickle.dumps(digest).hex(),))
-        row = {"key": key[0], "n": int(digest.size())}
-        for q in self.qs:
-            row[f"p{str(q).replace('.', '_')}"] = float(digest.quantile(q))
-        yield pd.DataFrame([row])
+        blob, out = fold_tdigest(
+            self._state.get()[0] if self._state.exists() else None,
+            rows,
+            key[0],
+            self.value_col,
+            self.qs,
+            self.compression,
+        )
+        self._state.update((blob,))
+        yield out
 
     def close(self) -> None:
         pass
@@ -270,18 +267,12 @@ def tdigest_stream_quantiles_tws(
     ok, reason = tws_available()
     if not ok:
         raise ImportError(f"transformWithStateInPandas unavailable: {reason}")
-    out_fields = [
-        StructField("key", StringType()),
-        StructField("n", LongType()),
-    ] + [
-        StructField(f"p{str(q).replace('.', '_')}", DoubleType()) for q in qs
-    ]
     proc = TDigestQuantilesProcessor(
         value_col, qs, compression, _gap_to_ms(ttl) if ttl else None
     )
     return events.groupBy(key_col).transformWithStateInPandas(
         proc,
-        outputStructType=StructType(out_fields),
+        outputStructType=quantiles_schema(qs),
         outputMode="Update",
         timeMode="None",
     )

@@ -283,6 +283,37 @@ def test_tdigest_decayed_weights(spark):
         assert r["decayed_n"] == pytest.approx(expect, rel=1e-9), r["event_type"]
 
 
+def test_decayed_operators_keyless_equals_single_group(spark):
+    """With one group, the keyless decayed forms (one global merge) give
+    the same answer as the grouped forms: same decayed_n and quantiles
+    for t-digest, same decayed counts and bounds for Space-Saving."""
+    from crick_spark.operators.crick_ops import (
+        spacesaving_decayed_topk,
+        tdigest_decayed_quantiles,
+    )
+
+    ev = load_table(spark, SF_SMALL, "events")
+    one = ev.where(F.col("event_type") == ev.first()["event_type"])
+    qs = [0.1, 0.5, 0.9]
+
+    def rows(df, drop):
+        return sorted(tuple(r[c] for c in df.columns if c != drop) for r in df.collect())
+
+    grouped = tdigest_decayed_quantiles(one, "value", "ts", qs, by=["event_type"])
+    keyless = tdigest_decayed_quantiles(one, "value", "ts", qs)
+    g, k = rows(grouped, "event_type"), rows(keyless, None)
+    assert len(g) == 1 and g == k
+    days = one.groupBy(F.to_date("ts").alias("d")).count().toPandas()
+    ref = days["d"].max()
+    expect = sum(0.5 ** ((ref - d).days / 7.0) * c for d, c in zip(days["d"], days["count"]))
+    assert k[0][0] == pytest.approx(expect, rel=1e-9)
+
+    grouped = spacesaving_decayed_topk(one, "user_id", "ts", 5, by=["event_type"])
+    keyless = spacesaving_decayed_topk(one, "user_id", "ts", 5)
+    g, k = rows(grouped, "event_type"), rows(keyless, None)
+    assert len(g) == 5 and g == k
+
+
 def test_hll_estimates_within_tolerance(spark):
     """Datasketches HLL at lgK=14 is well under the query's 3% bound at
     the fixture cardinalities; the query emits the bound check as a

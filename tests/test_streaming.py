@@ -815,6 +815,37 @@ def test_sketch_store_meta_is_append_only(spark, tmp_path):
     assert uri_store._meta_local == f"{tmp_path}/uri_store/meta"
 
 
+def test_sketch_store_both_writes_fail(spark, tmp_path, monkeypatch):
+    """When the t-digest and HLL writes both fail, fold raises the
+    t-digest (first-started) write's error chained to the HLL one, even
+    though the HLL write fails first, and commits no meta generation."""
+    import time
+    import traceback
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from crick_spark.streaming.sketch_store import SketchStore
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if "/td_" in path:
+            time.sleep(0.5)
+            raise OSError(f"td write failed: {path}")
+        raise OSError(f"hll write failed: {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    store = SketchStore(str(tmp_path / "store"))
+    batch = spark.createDataFrame(
+        [("a", 1.0, 1)], "event_type string, value double, user_id long"
+    )
+    with pytest.raises(OSError, match="td write failed") as info:
+        store.fold(batch, 0)
+    assert "hll write failed" in str(info.value.__cause__)
+    text = "".join(traceback.format_exception(info.value))
+    assert "td write failed" in text and "hll write failed" in text
+    assert store._meta_files() == []
+    assert store.read_meta(spark) == (-1, None, None)
+
+
 def test_sketch_store_retention_bounds_state(spark, tmp_path):
     """Round-6 sliding-window TTL: with retention_days=3 a 6-day replay
     keeps at most groups x 3 day-partial rows on disk (state bounded
