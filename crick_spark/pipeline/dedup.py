@@ -460,65 +460,6 @@ def jaccard_ngram_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Duplicate clustering (connected components over near-dup pairs)
-# ---------------------------------------------------------------------------
-def dup_clusters(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """Connected components over an undirected near-dup pair graph via
-    iterative min-label propagation: every node starts labeled with its
-    own id; each round a node takes the min of its label and its
-    neighbors' labels; at fixpoint the label is the component's minimum
-    id — the canonical document of the duplicate cluster.
-
-    Returns (doc-id column named ``id_a``'s source col name dropped)
-    ``(id, cluster_id)`` for every node that appears in ``pairs``.
-
-    Scale shape: per iteration one join edges x labels + one
-    hash-aggregate; ``localCheckpoint`` truncates lineage so the plan
-    doesn't grow with iterations (a driver-side loop of *jobs*, not a
-    driver-side loop over collected rows).  Iterations = graph diameter,
-    and near-dup clusters are shallow (dupes of a common source), so
-    convergence is fast; for adversarial long-chain graphs swap in the
-    large-star/small-star variant (Kiveris et al.) — same join shape,
-    halved diameter per round.
-    """
-    fwd = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    rev = pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
-    edges = fwd.union(rev).distinct().localCheckpoint()
-    labels = edges.select(F.col("u").alias("id")).distinct().select(
-        "id", F.col("id").alias("cluster_id")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["v"] == labels["id"])
-            .groupBy("u")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neigh, labels["id"] == neigh["u"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-# ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
 def simhash_expr(text: Column, bits: int = 64) -> Column:
@@ -820,9 +761,10 @@ def repeated_window_spans(
     word positions, spans maximal (every pair of retained spans per doc
     is separated by at least one non-duplicated window start).
     ``lead_wh`` is the md5 of the span's LEADING ``window_words``-word
-    window — the passage-family key ``remove_repeated_spans`` uses for
-    corpus-wide keep-first, carried out of detection so the apply step
-    never re-tokenizes the corpus.
+    window as the 16-byte binary digest (BinaryType; a 32-char hex
+    string before r15) — the passage-family key
+    ``remove_repeated_spans`` uses for corpus-wide keep-first, carried
+    out of detection so the apply step never re-tokenizes the corpus.
 
     Plan: per doc, all n−L+1 rolling windows materialize ONLY as 16-byte
     md5 hashes (sequence + slice + concat_ws + md5 under codegen — the

@@ -1,9 +1,9 @@
-"""Iterative graph algorithms as DataFrame plans: weighted PageRank.
+"""Iterative graph algorithms as DataFrame plans: weighted PageRank,
+connected components, triangle and core-number operators.
 
-Companion to the connected-components label propagation in
-``pipeline/dedup.py`` (the other iterative operator): both express the
-iteration as repeated joins over an edge relation, letting Catalyst
-plan each step.
+Each iteration is expressed as repeated joins over an edge relation,
+letting Catalyst plan each step; operators with a bounded driver twin
+decide the tier through ``crick_spark.driver_close``.
 
 100 TB shape per iteration: one join of the rank vector (2 cols: node,
 rank) against the out-weight-normalized edge list, one groupBy(dst) —
@@ -11,7 +11,7 @@ i.e. two shuffles over edge-count rows, never materializing anything
 quadratic.  The edge list is computed once and cached/reused across
 iterations; for long iteration chains the rank vector is automatically
 localCheckpoint-truncated every ``checkpoint_interval`` steps (same
-lineage-control pattern as dedup's components loop), so plan depth and
+lineage-control pattern as the star-contraction rounds), so plan depth and
 scheduler cost stay bounded at any iteration count.  Fixed iteration
 counts keep results deterministic and SQL-oracle-able (the oracle
 unrolls the same iterations as chained CTEs); deep chains are
@@ -162,7 +162,7 @@ def pagerank(
     # and the final ranks are ONE projection over sp — no per-iteration
     # joins, shuffles, or rank-vector materializations at any scale.
     # Detection is a 2-boolean decide-and-use aggregate over the census
-    # (bounded driver transfer, the _close/limit(cap+1) precedent).
+    # (a bounded driver transfer of one row).
     # Graphs with any non-pure source keep the pre-r14 loop
     # byte-for-byte.  MEASURED (sf0.1 pagerank_deep_dangling, 10
     # iterations): 12.1 s / 111 jobs before this round, ~3.5 s after;
@@ -458,187 +458,132 @@ def personalized_pagerank(
     return ranks
 
 
-#: edge sets at or under this count close driver-side (one
-#: decide-and-use collect + union-find) instead of the iterative
-#: distributed propagation — the ClusterStore._close precedent: 200k
-#: 2-field Rows ≈ 10 MB, far under any driver hazard, and the
-#: per-superstep scheduling cost it replaces is ~10-20 tiny jobs
+#: edge sets at or under this count close driver-side (one Arrow collect
+#: + ``min_root_labels``) instead of running star-contraction rounds:
+#: 200k 2-field rows are a few MB, far under any driver hazard, and each
+#: contraction round they replace costs ~5 tiny Spark jobs
 CC_DRIVER_CLOSE_MAX_EDGES = 200_000
+
+
+def min_root_labels(pairs) -> dict:
+    """Union-find over (a, b) node pairs: returns ``{node: minimum node
+    id of its component}`` for every node in a pair (a self-pair (a, a)
+    only registers ``a``).  Union by min root keeps every root the
+    minimum of its set, so this is exactly ``connected_components``'
+    (node, component) labeling."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    nodes = set()
+    for a, b in pairs:
+        nodes.update((a, b))
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in nodes}
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
+    max_iter: int = 50,
     driver_close_max_edges: int = CC_DRIVER_CLOSE_MAX_EDGES,
 ) -> DataFrame:
-    """Connected components by hash-min label propagation — the step that
-    turns near-duplicate PAIRS into dedup CLUSTERS (pick one canonical
-    doc per component; transitive closure of the pair relation).
+    """Connected components — the step that turns near-duplicate PAIRS
+    into dedup CLUSTERS (pick one canonical doc per component; transitive
+    closure of the pair relation).  Returns ``(node, component)`` with
+    component = the minimum node id reachable, over every node that
+    appears in a non-null edge (a self-loop-only node labels itself).
 
-    Every node starts labeled with its own id; each superstep replaces
-    the label with the min over itself and its neighbors' labels, so the
-    component's minimum id floods outward one hop per step — convergence
-    in O(component diameter) supersteps, checked with a changed-label
-    count per step (one action; the loop exits as soon as a step changes
-    nothing, max_iter is the runaway bound, and exhausting it without
-    convergence raises rather than returning a half-propagated
-    labeling).  Lineage is truncated per superstep (localCheckpoint, the
-    pagerank pattern) so the plan never grows with iterations.
+    Two tiers, identical output:
 
-    Near-dup components are tiny in practice (diameter ≤ a few hops), so
-    plain min-propagation is the right plan; for adversarial
-    long-diameter graphs the alternating star contractions of
-    Kiveris et al., *Connected components in MapReduce and beyond*
-    (SoCC 2014) bound rounds at O(log n) — same per-step join shape.
+    - **driver** — the non-null edge relation goes through
+      ``driver_close``: one checkpoint, one count, and at or under
+      ``driver_close_max_edges`` rows one parallel Arrow collect feeding
+      ``min_root_labels``.  Integral and string ids only (their values
+      collect as Python ``int``/``str``, which order like Spark's); any
+      other id type, or ``driver_close_max_edges=0``, takes the
+      distributed tier.
+    - **distributed** — alternating large-star / small-star contraction
+      (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii, *Connected
+      components in MapReduce and beyond*, SoCC 2014) over the
+      checkpoint: O(log n) rounds on ANY topology, where min-label
+      propagation needs O(diameter) supersteps (chained near-dup pairs
+      form long paths).  Per round pair:
 
-    Returns (node, component) with component = min node id reachable.
+      * large-star — every node links its LARGER neighbors to
+        m = min(Γ(u) ∪ {u});
+      * small-star — every node links its ≤-neighbors and itself to the
+        minimum of that set;
 
-    r14 (guide §1.2 — the per-task work here is the scheduler's): an
-    edge set at or under ``driver_close_max_edges`` closes DRIVER-side —
-    one decide-and-use ``limit(cap+1).collect()`` feeds a min-root
-    union-find whose output is identical (min over roots = min over
-    members), replacing O(diameter) supersteps of ~2 tiny jobs each.
-    Near-dup pair sets are usually batch- or corpus-filtered and far
-    under the cap; bigger graphs keep the distributed loop byte-for-byte
-    (pass ``driver_close_max_edges=0`` to force it).
-    """
+      each one groupBy(min) + one self-join over edge rows with a
+      localCheckpoint per round.  Fixpoint = the edge set is literally
+      unchanged (same count AND empty exceptAll — exact, no
+      probabilistic signature); every component is then a star rooted
+      at its minimum id.  ``max_iter`` bounds the rounds; exhausting it
+      raises rather than returning a partial labeling."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        IntegralType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from crick_spark.driver_close import driver_close
+
     base = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull()
     )
-    if (
-        driver_close_max_edges
-        and base.schema["u"].dataType == base.schema["v"].dataType
-    ):
-        head = base.limit(int(driver_close_max_edges) + 1).collect()
-        if len(head) <= driver_close_max_edges and all(
-            type(r["u"]) in (int, str) and type(r["v"]) in (int, str)
-            for r in head
-        ):
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            nodes = set()
-            for row in head:
-                a, b = row["u"], row["v"]
-                nodes.update((a, b))
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            from pyspark.sql.types import StructField, StructType
-
-            node_t = base.schema["u"].dataType
-            return edges.sparkSession.createDataFrame(
-                [(n, find(n)) for n in sorted(nodes)],
-                StructType(
-                    [
-                        StructField("node", node_t),
-                        StructField("component", node_t),
-                    ]
-                ),
-            )
-    und = (
-        base.unionByName(
-            base.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .distinct()
-        .cache()
+    node_t = base.schema["u"].dataType
+    cap = (
+        int(driver_close_max_edges)
+        if node_t == base.schema["v"].dataType
+        and isinstance(node_t, (IntegralType, StringType))
+        else 0
     )
-    labels = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            labels.join(und, labels.node == und.u)
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min("component").alias("nmin"))
+    base, head = driver_close(base, cap)
+    if head is not None:
+        roots = min_root_labels(
+            zip(head.column("u").to_pylist(), head.column("v").to_pylist())
         )
-        nxt = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nmin"), F.col("component")),
-                ).alias("component"),
-                (
-                    F.coalesce(F.col("nmin"), F.col("component"))
-                    < F.col("component")
-                ).alias("__changed__"),
-            )
-            .localCheckpoint(eager=True)
+        nodes = sorted(roots)
+        # a pandas frame crosses back through Arrow: collecting 1,500
+        # rows built from a list of tuples took 0.5 s on 4 cores, from
+        # pandas 0.04 s
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame(
+                {"node": nodes, "component": [roots[n] for n in nodes]}
+            ),
+            StructType(
+                [
+                    StructField("node", node_t),
+                    StructField("component", node_t),
+                ]
+            ),
         )
-        changed = nxt.where("__changed__").limit(1).count()
-        labels = nxt.drop("__changed__")
-        if changed == 0:
-            und.unpersist()
-            return labels
-    und.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} supersteps"
-    )
-
-
-def connected_components_contract(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
-    *Connected components in MapReduce and beyond*, SoCC 2014) — the
-    LONG-DIAMETER-safe twin of ``connected_components``: hash-min label
-    propagation floods one hop per superstep (O(diameter) rounds — a
-    10k-link chain of near-dup pairs needs 10k shuffles), while star
-    contraction halves component "height" per round pair, converging in
-    O(log n) rounds on ANY topology.  Per round pair:
-
-    - **large-star** — every node links its LARGER neighbors to
-      m = min(Γ(u) ∪ {u});
-    - **small-star** — every node links its ≤-neighbors and itself to
-      the minimum of that set;
-
-    each is one groupBy(min) + one self-join over edge rows (the same
-    two-shuffle shape as a hash-min superstep), with per-round
-    localCheckpoint truncation.  Fixpoint = the edge set is literally
-    unchanged (checked exactly: same count AND empty two-sided
-    exceptAll — no probabilistic signature), at which point every
-    component is a star rooted at its minimum id.
-
-    Semantics identical to ``connected_components``: returns
-    ``(node, component)`` with component = min reachable node id, over
-    the nodes that appear in ≥1 edge.  Cross-checked against it (and a
-    Python union-find) in tests; pick THIS form when pair graphs can
-    chain (transcript/frame dedup where near-dups form long paths), the
-    hash-min form when components are known-shallow."""
-    base = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("a"),
-        F.greatest(F.col(src), F.col(dst)).alias("b"),
-    ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     # every node ever seen — INCLUDING self-loop-only nodes, which the
-    # contraction drops but the labeling must still cover (hash-min
-    # ``connected_components`` parity, asserted in tests)
+    # contraction drops but the labeling must still cover
     all_nodes = (
-        base.select(F.col("a").alias("node"))
-        .unionAll(base.select(F.col("b").alias("node")))
+        base.select(F.col("u").alias("node"))
+        .unionAll(base.select(F.col("v").alias("node")))
         .distinct()
         .localCheckpoint(eager=True)
     )
     cur = (
-        base.where(F.col("a") != F.col("b"))
+        base.select(
+            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+        )
+        .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -694,20 +639,17 @@ def connected_components_contract(
         cur = nxt
     else:
         raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {max_iter} rounds"
         )
     # stars: (b=node, a=root); roots label themselves; nodes whose
-    # component collapsed entirely (singletons after noise removal)
-    # appear only in all_nodes
+    # component collapsed entirely (self-loop-only) appear only in
+    # all_nodes
     labels = cur.select(
         F.col("b").alias("node"), F.col("a").alias("component")
     )
-    return (
-        all_nodes.join(labels, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("component"), F.col("node")).alias("component"),
-        )
+    return all_nodes.join(labels, "node", "left").select(
+        "node",
+        F.coalesce(F.col("component"), F.col("node")).alias("component"),
     )
 
 
@@ -796,17 +738,28 @@ def _triangle_counts_normalized(e: DataFrame) -> DataFrame:
 #: triangle total counted on the driver (one Arrow collect of the
 #: coin-flagged edges + numpy wedge generation) instead of the
 #: distributed degree-ordered wedge join — integer-exact either way.
-#: 2M (long, long, bool) rows ≈ 34 MB via Arrow; the wedge array over
-#: the p-thinned subgraph is O((pm)^1.5) worst case.
+#: 2M (long, long, bool) rows ≈ 34 MB via Arrow.
 TRIANGLE_DRIVER_CLOSE_MAX_EDGES = 2_000_000
 
+#: the edge cap alone does not bound the driver: a ~2,000-node clique
+#: fits under it yet orients into ~1.3e9 wedges.  The driver twin counts
+#: its oriented wedges Σ k(k−1)/2 first and hands anything above this
+#: bound back to the distributed wedge join.  The wedge arrays cost
+#: ~40-50 B per wedge (int64 index, key and search temporaries), so 50M
+#: wedges peak near 2-2.5 GB; the full sf0.1 co-purchase graph (1.196 M
+#: edges) has 41.1 M wedges at p=1, and the registered p=0.25 sample
+#: far fewer.
+TRIANGLE_DRIVER_CLOSE_MAX_WEDGES = 50_000_000
 
-def _triangle_total_driver(a, b) -> int:
+
+def _triangle_total_driver(a, b) -> int | None:
     """Exact triangle total over normalized (a < b, distinct) edges held
     as numpy int arrays — the driver twin of the degree-ordered wedge
     join: orient every edge from its lower-(degree, id) endpoint, emit
     each out-neighborhood's pairs, count the wedges whose closing edge
-    exists.  Integer-exact, so identical to the distributed count."""
+    exists.  Integer-exact, so identical to the distributed count.
+    Returns None, before building any wedge, when the oriented wedge
+    count exceeds ``TRIANGLE_DRIVER_CLOSE_MAX_WEDGES``."""
     import numpy as np
 
     nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
@@ -826,6 +779,8 @@ def _triangle_total_driver(a, b) -> int:
     lo_s, hi_s = lo[order], hi[order]
     starts = np.flatnonzero(np.r_[True, lo_s[1:] != lo_s[:-1]])
     k = np.diff(np.r_[starts, lo_s.size])
+    if int((k * (k - 1) // 2).sum()) > TRIANGLE_DRIVER_CLOSE_MAX_WEDGES:
+        return None
     # wedge (x, y): each element paired with every LATER element of its
     # group — x < y holds because hi is sorted ascending within a group
     wpos = np.arange(lo_s.size, dtype=np.int64) - np.repeat(starts, k)
@@ -867,6 +822,10 @@ def approx_triangle_total(
     Returns one row: ``(n_edges, n_sampled, t_sampled, t_est,
     rel_err_bound)``.  With p=0.5 the scale factor is exactly 8, so
     ``t_est`` is integer-exact and SQL-oracle-able."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType, LongType
+
+    from crick_spark.driver_close import driver_close
     from crick_spark.pipeline.sampling import md5_uniform
 
     if not (0.0 < p <= 1.0):
@@ -878,67 +837,46 @@ def approx_triangle_total(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .select(
+            "a",
+            "b",
+            (
+                md5_uniform(F.concat_ws("#", F.col("a"), F.col("b")))
+                < F.lit(p)
+            ).alias("s"),
+        )
     )
-    samp = e.where(
-        md5_uniform(F.concat_ws("#", F.col("a"), F.col("b"))) < F.lit(p)
+    # driver close (guide §1.2): the sampled subgraph's EXACT count is
+    # an integer, so when the normalized edge set fits the cap, the
+    # whole wedge join (~12 jobs) AND both count aggregates collapse to
+    # the checkpoint + count + one Arrow collect of the coin-FLAGGED
+    # edges + the numpy twin.  The coin is the SAME in-plan md5
+    # expression either way — the collected flags ARE the sample
+    # filter's input, coin-for-coin.  Integer node ids only (the
+    # orientation tie-break compares ids; numpy's sort order is only
+    # guaranteed to match Spark's for numeric types).
+    t_ab = e.schema["a"].dataType
+    integral = t_ab == e.schema["b"].dataType and isinstance(
+        t_ab, (LongType, IntegerType)
     )
-    # r15 driver close (guide §1.2): the sampled subgraph's EXACT count
-    # is an integer, so when the normalized edge set fits the driver
-    # cap the whole wedge join (the plan's remaining ~12 jobs) AND both
-    # count aggregates collapse to one count (~free on the checkpoint)
-    # + one parallel Arrow collect of the coin-FLAGGED edges + the
-    # numpy twin (a limit(cap+1) decide-and-use collect funnels through
-    # CollectLimit's sequential partition pulls — measured 0.5-0.9 s vs
-    # 0.1 s count + 0.25 s parallel collect at 1.2M edges).  The coin
-    # is evaluated by the SAME in-plan md5 expression either way — the
-    # collected flags ARE the sample filter's output, coin-for-coin.
-    # Integer node ids only (the orientation tie-break compares ids;
-    # numpy's sort order is only guaranteed to match Spark's for
-    # numeric types); anything else — and any over-cap edge set —
-    # keeps the distributed wedge join.
-    t_samp = n_s = n_e = None
-    if driver_close_max_edges:
-        from pyspark.sql.types import IntegerType, LongType
-
-        t_ab = e.schema["a"].dataType
-        if t_ab == e.schema["b"].dataType and isinstance(
-            t_ab, (LongType, IntegerType)
-        ):
-            n_edges_v = e.count()
-            if n_edges_v <= driver_close_max_edges:
-                import numpy as np
-
-                head = e.select(
-                    "a",
-                    "b",
-                    (
-                        md5_uniform(
-                            F.concat_ws("#", F.col("a"), F.col("b"))
-                        )
-                        < F.lit(p)
-                    ).alias("s"),
-                ).toArrow()
-                flag = head.column("s").to_numpy(zero_copy_only=False)
-                keep = np.flatnonzero(flag)
-                t = _triangle_total_driver(
-                    head.column("a").to_numpy(zero_copy_only=False)[keep],
-                    head.column("b").to_numpy(zero_copy_only=False)[keep],
-                )
-                s = edges.sparkSession
-                t_samp = s.createDataFrame(
-                    [(int(t),)], "t_sampled long"
-                )
-                n_s = s.createDataFrame(
-                    [(int(keep.size),)], "n_sampled long"
-                )
-                n_e = s.createDataFrame(
-                    [(int(n_edges_v),)], "n_edges long"
-                )
-    if t_samp is None:
+    e, head = driver_close(e, driver_close_max_edges if integral else 0)
+    t = None
+    if head is not None:
+        keep = np.flatnonzero(head.column("s").to_numpy(zero_copy_only=False))
+        t = _triangle_total_driver(
+            head.column("a").to_numpy(zero_copy_only=False)[keep],
+            head.column("b").to_numpy(zero_copy_only=False)[keep],
+        )
+    if t is not None:
+        s = edges.sparkSession
+        t_samp = s.createDataFrame([(int(t),)], "t_sampled long")
+        n_s = s.createDataFrame([(int(keep.size),)], "n_sampled long")
+        n_e = s.createDataFrame([(head.num_rows,)], "n_edges long")
+    else:
         # samp is a filter of the normalized+checkpointed e — already
         # distinct (u<v) pairs, so skip triangle_counts' re-normalization
         # (one edge-sized shuffle saved per call; r14)
+        samp = e.where(F.col("s"))
         t_samp = (
             _triangle_counts_normalized(
                 samp.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -1258,7 +1196,11 @@ def coreness(
     auto-selects 2.  Returns ``(node, coreness)`` with coreness after
     ``rounds`` h-index steps.
     """
+    import pandas as pd
     from pyspark.sql import Window
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from crick_spark.driver_close import driver_close
 
     if checkpoint_interval is None:
         checkpoint_interval = 2
@@ -1270,45 +1212,33 @@ def coreness(
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    # r15 driver close (guide §1.2 — per-round cost here is pure
+    # driver close (guide §1.2 — per-round cost here is pure
     # scheduling: ~16 tiny jobs at sf0.1 for 3 rounds): the normalized
-    # edge set is materialized ONCE (it feeds the decide-and-use probe
-    # AND, over-cap, the incidence build — never a second self-join of
-    # the caller's relation), then an edge set at or under the cap runs
-    # the identical integer h-index iteration in numpy.  Long/string
-    # node ids only — everything else keeps the distributed loop.
-    if driver_close_max_edges:
-        from pyspark.sql.types import LongType, StringType
-
-        t_a, t_b = und0.schema["a"].dataType, und0.schema["b"].dataType
-        if t_a == t_b and isinstance(t_a, (LongType, StringType)):
-            und0 = und0.localCheckpoint(eager=True)
-            # decide via count, then a FULL parallel Arrow collect: on
-            # the checkpointed relation the count is ~free, and it
-            # avoids CollectLimit's sequential partition pulls (r15
-            # measured 0.5-0.9 s limit-collect vs 0.1 s count + 0.25 s
-            # parallel collect at 1.2M edges)
-            if und0.count() <= driver_close_max_edges:
-                head = und0.toArrow()
-                import pandas as pd
-                from pyspark.sql.types import StructField, StructType
-
-                schema = StructType(
-                    [
-                        StructField("node", t_a),
-                        StructField("coreness", LongType()),
-                    ]
-                )
-                if head.num_rows == 0:
-                    return edges.sparkSession.createDataFrame([], schema)
-                nodes, c = _coreness_driver(
-                    head.column("a").to_numpy(zero_copy_only=False),
-                    head.column("b").to_numpy(zero_copy_only=False),
-                    rounds,
-                )
-                return edges.sparkSession.createDataFrame(
-                    pd.DataFrame({"node": nodes, "coreness": c}), schema
-                )
+    # edge set is materialized ONCE by ``driver_close`` (it feeds the
+    # decision AND, over the cap, the incidence build — never a second
+    # self-join of the caller's relation), then an edge set at or under
+    # the cap runs the identical integer h-index iteration in numpy.
+    # Long/string node ids only — everything else keeps the
+    # distributed loop.
+    t_a = und0.schema["a"].dataType
+    driver_ok = t_a == und0.schema["b"].dataType and isinstance(
+        t_a, (LongType, StringType)
+    )
+    und0, head = driver_close(und0, driver_close_max_edges if driver_ok else 0)
+    if head is not None:
+        schema = StructType(
+            [StructField("node", t_a), StructField("coreness", LongType())]
+        )
+        if head.num_rows == 0:
+            return edges.sparkSession.createDataFrame([], schema)
+        nodes, c = _coreness_driver(
+            head.column("a").to_numpy(zero_copy_only=False),
+            head.column("b").to_numpy(zero_copy_only=False),
+            rounds,
+        )
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"node": nodes, "coreness": c}), schema
+        )
     # (r14 measured, NOT adopted: hash-repartitioning this incidence
     # list by the join key before the checkpoint — hoping each round's
     # und⨝labels join would reuse the partitioning — ran ~0.6 s SLOWER

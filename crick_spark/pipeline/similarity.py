@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from crick_spark.driver_close import driver_close
+
 # Max query-panel rows whose per-query ADC LUTs may be built driver-side
 # (r13, VERDICT r12 #7).  Each LUT is m × ksub doubles (KBs), so 10k
 # queries is comfortably bounded; beyond it the caller should chunk.
@@ -1987,14 +1989,14 @@ def _ivfpq_scorers(
         top = np.argsort(-sims, axis=1, kind="stable")[:, :np_]
         return pd.Series([row.astype(np.int32) for row in top])
 
-    # Loud cap (r13, VERDICT r12 #7 — the text.py limit(cap+1) loud-fail
-    # pattern): per-query LUTs are panel-bounded DRIVER state (m × ksub
-    # doubles each); an unbounded query panel must fail with a message,
-    # not an OOM.  limit(cap+1) both decides and feeds — one execution.
-    panel_rows = queries.select(query_id_col, vec_col).limit(
-        ANN_QUERY_PANEL_MAX + 1
-    ).collect()
-    if len(panel_rows) > ANN_QUERY_PANEL_MAX:
+    # Loud cap (r13, VERDICT r12 #7): per-query LUTs are panel-bounded
+    # DRIVER state (m × ksub doubles each); an unbounded query panel
+    # must fail with a message, not an OOM.  ``driver_close`` both
+    # decides and feeds — one execution.
+    _, panel = driver_close(
+        queries.select(query_id_col, vec_col), ANN_QUERY_PANEL_MAX
+    )
+    if panel is None:
         raise ValueError(
             f"query panel exceeds ANN_QUERY_PANEL_MAX="
             f"{ANN_QUERY_PANEL_MAX} rows; per-query ADC LUTs are "
@@ -2003,15 +2005,17 @@ def _ivfpq_scorers(
         )
     luts = {}
     qdotc = {}
-    for r in panel_rows:
-        q = np.asarray(r[1], dtype=np.float64)
+    for qid, vec in zip(
+        panel.column(0).to_pylist(), panel.column(1).to_pylist()
+    ):
+        q = np.asarray(vec, dtype=np.float64)
         nrm = np.linalg.norm(q)
         q = q / nrm if nrm > 0 else q
-        luts[r[0]] = np.stack(
+        luts[qid] = np.stack(
             [B[j] @ q[j * dsub : (j + 1) * dsub] for j in range(m)]
         )
         if by_residual:
-            qdotc[r[0]] = q @ cn.T
+            qdotc[qid] = q @ cn.T
 
     @pandas_udf("double")
     def adc(qids: pd.Series, clusters: pd.Series, codes: pd.Series) -> pd.Series:
@@ -2145,12 +2149,12 @@ def ivfpq_bulk_topk_from_layout(
     # the rerank reads ~pool vectors instead of every probed cluster's.
     # Above the cap the literal list would bloat the plan; the plain
     # join still reads only probed PARTITIONS (levers one and two).
-    pool_ids = [
-        r[0] for r in pool.select(id_col).distinct().limit(10_001).collect()
-    ]
+    _, pool_ids = driver_close(pool.select(id_col).distinct(), 10_000)
     vecs = pruned.select(id_col, vec_col)
-    if len(pool_ids) <= 10_000:
-        vecs = vecs.where(F.col(id_col).isin(pool_ids))
+    if pool_ids is not None:
+        vecs = vecs.where(
+            F.col(id_col).isin(pool_ids.column(0).to_pylist())
+        )
     out = _bulk_rerank(
         pool, queries, vecs, k,
         query_id_col, id_col, vec_col, True,

@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from crick_spark.driver_close import driver_close
 from crick_spark.pipeline.dedup import shingles_expr, words_expr
 
 
@@ -540,7 +541,7 @@ def bpe_train(
 
     Driver merge-loop fast path (r10, the unigram-trainer lever
     applied to BPE): word tables under ``driver_max_words`` (default
-    ``DRIVER_EM_MAX_WORDS``; decide-and-use ``limit(cap+1).collect()``)
+    ``DRIVER_EM_MAX_WORDS``; decided and collected by ``driver_close``)
     run every merge round driver-side — zero Spark jobs per round
     instead of a pair-count aggregate + collect + mapInPandas +
     checkpoint each.  Same ranking, same ``_accept_merge_batch`` rule,
@@ -566,17 +567,21 @@ def bpe_train(
         .groupBy("word")
         .agg(F.count("*").alias("wfreq"))
         .select(F.split("word", "").alias("syms"), "wfreq")
-        .localCheckpoint(eager=True)
     )
     n_merges = int(n_merges)
     fetch = max(2, int(batch_size) + 1)
     cap = int(
         DRIVER_EM_MAX_WORDS if driver_max_words is None else driver_max_words
     )
-    head = words.limit(cap + 1).collect() if cap > 0 else None
-    if head is not None and len(head) <= cap:
+    words, head = driver_close(words, cap)
+    if head is not None:
         return _bpe_train_driver(
-            [(r["syms"], int(r["wfreq"])) for r in head],
+            list(
+                zip(
+                    head.column("syms").to_pylist(),
+                    head.column("wfreq").to_pylist(),
+                )
+            ),
             n_merges,
             fetch,
             stats,
@@ -932,14 +937,13 @@ def _estep_batch(
 
 
 #: word tables at or under this row count run the whole EM loop
-#: driver-side off ONE decide-and-use collect (the ClusterStore
-#: DRIVER_CLOSE pattern): the table is (word, wfreq) rows — 50k of
-#: them ≈ ~2 MB — and every EM round plus the seeding census otherwise
-#: pays a full Spark job for kernel work that is milliseconds on a
-#: Heaps-bounded relation.  The cap is sized so the driver-side
-#: substring census (≈ |words|·|word|·max_len dict increments, the
-#: slowest driver phase) stays well under one Spark job's overhead;
-#: larger tables keep the distributed path unchanged.
+#: driver-side off ONE ``driver_close`` collect: the table is (word,
+#: wfreq) rows — 50k of them ≈ ~2 MB — and every EM round plus the
+#: seeding census otherwise pays a full Spark job for kernel work that
+#: is milliseconds on a Heaps-bounded relation.  The cap is sized so
+#: the driver-side substring census (≈ |words|·|word|·max_len dict
+#: increments, the slowest driver phase) stays well under one Spark
+#: job's overhead; larger tables keep the distributed path unchanged.
 DRIVER_EM_MAX_WORDS = 50_000
 
 
@@ -1060,9 +1064,8 @@ def unigram_lm_train(
     on a 46k-word vocabulary with integer-identical piece counts.
 
     Driver EM fast path (r10, VERDICT #8): when the distinct-word
-    table fits ``driver_em_max_words`` (decide-and-use
-    ``limit(cap+1).collect()`` — one execution both decides the path
-    and feeds the loop, the ClusterStore pattern), the substring
+    table fits ``driver_em_max_words`` (``driver_close`` — one
+    execution both decides the path and feeds the loop), the substring
     seeding census and every EM round run driver-side through the SAME
     ``_estep_batch`` kernel — zero Spark jobs per round instead of one
     mapInPandas + aggregate + collect each.  Counts are integer sums
@@ -1096,13 +1099,16 @@ def unigram_lm_train(
         .where(F.length("word") >= 1)
         .groupBy("word")
         .agg(F.count("*").alias("wfreq"))
-        .localCheckpoint(eager=True)
     )
-    cap = int(driver_em_max_words)
-    head = words.limit(cap + 1).collect() if cap > 0 else None
-    if head is not None and len(head) <= cap:
+    words, head = driver_close(words, int(driver_em_max_words))
+    if head is not None:
         return _unigram_lm_train_driver(
-            [(r["word"], int(r["wfreq"])) for r in head],
+            list(
+                zip(
+                    head.column("word").to_pylist(),
+                    head.column("wfreq").to_pylist(),
+                )
+            ),
             vocab_size,
             seed_size,
             max_piece_len,

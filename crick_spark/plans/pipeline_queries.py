@@ -1490,22 +1490,32 @@ comp AS (SELECT n AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY n)
 SELECT cluster_id, count(*) AS n_docs
 FROM comp GROUP BY cluster_id
 """,
-    doc="Duplicate clustering: connected components (iterative min-label "
-    "propagation, lineage-checkpointed driver loop of distributed jobs) "
-    "over the exact Jaccard near-dup pair graph; cluster_id is the "
-    "minimum doc_id = the canonical document to keep.  The oracle walks "
-    "the same graph with a recursive CTE — iterative graph algorithms "
-    "and SQL recursion agree exactly.",
+    doc="Duplicate clustering: connected components "
+    "(pipeline/graph.py:connected_components — driver union-find under "
+    "its edge cap, star contraction above it) over the exact Jaccard "
+    "near-dup pair graph; cluster_id is the minimum doc_id = the "
+    "canonical document to keep.  The oracle walks the same graph with "
+    "a recursive CTE — iterative graph algorithms and SQL recursion "
+    "agree exactly.",
 )
 def dup_cluster_rollup(spark, sf_dir):
-    from crick_spark.pipeline.dedup import dup_clusters
+    _, labels = _doc_clusters(spark, sf_dir)
+    return labels.groupBy("cluster_id").agg(F.count("*").alias("n_docs"))
+
+
+def _doc_clusters(spark, sf_dir):
+    """(documents, (doc_id, cluster_id)) over the exact 3-gram Jaccard
+    near-dup pairs (>= 0.5, lang-blocked)."""
+    from crick_spark.pipeline.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_ngram_pairs(
         docs, "doc_id", "text", block_col="lang", threshold=0.5, n=3
     )
-    labels = dup_clusters(pairs)
-    return labels.groupBy("cluster_id").agg(F.count("*").alias("n_docs"))
+    cc = connected_components(pairs, "id_a", "id_b")
+    return docs, cc.select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
 
 
 @register(
@@ -1545,13 +1555,7 @@ SELECT cluster_id, doc_id AS canonical_doc, n_docs, canon_chars FROM (
     "picks with a rank-1 window.",
 )
 def dup_cluster_canonical(spark, sf_dir):
-    from crick_spark.pipeline.dedup import dup_clusters
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_ngram_pairs(
-        docs, "doc_id", "text", block_col="lang", threshold=0.5, n=3
-    )
-    labels = dup_clusters(pairs).withColumnRenamed("id", "doc_id")
+    docs, labels = _doc_clusters(spark, sf_dir)
     joined = docs.select("doc_id", "n_chars").join(
         F.broadcast(labels), "doc_id"
     )
@@ -3793,9 +3797,9 @@ FROM comp GROUP BY component
     oracle=_CLUSTERS_ORACLE,
     doc="Near-duplicate CLUSTERS: the exact 3-gram Jaccard pairs "
     "(>=0.5, lang-blocked - the already-oracled ground truth) closed "
-    "transitively by hash-min label propagation "
-    "(pipeline/graph.py:connected_components; converges in O(diameter) "
-    "supersteps, lineage truncated per step), emitting one row per "
+    "transitively by connected components "
+    "(pipeline/graph.py:connected_components: driver union-find under "
+    "its edge cap, star contraction above it), emitting one row per "
     "cluster with its size and min-id canonical representative.  The "
     "step every dedup pipeline needs between pair detection and doc "
     "removal.  Oracle: DuckDB recursive-CTE reachability closure + "
@@ -5232,29 +5236,30 @@ def prototype_pruning_embeddings(spark, sf_dir):
 @register(
     "dedup_clusters_contract_documents",
     oracle=_CLUSTERS_ORACLE,
-    doc="Near-duplicate clusters via STAR CONTRACTION (r12; Kiveris et "
-    "al., SoCC 2014, pipeline/graph.py:connected_components_contract) - "
-    "the long-diameter-safe twin of dedup_clusters_documents' hash-min "
-    "propagation: alternating large-star/small-star rounds halve "
-    "component height, so convergence is O(log n) rounds on ANY "
-    "topology where hash-min needs O(diameter) supersteps (chained "
-    "near-dup pairs - transcript/frame corpora - form exactly such "
-    "paths).  Same two-shuffle round shape, exact fixpoint test "
-    "(count + exceptAll, no probabilistic signature).  Identical "
-    "semantics proven twice: the SAME recursive-CTE reachability "
-    "oracle as the hash-min form hash-matches the cluster census, and "
-    "pytest pins node-level equality against hash-min AND a Python "
-    "union-find, including the 300-link path hash-min cannot finish.",
+    doc="Near-duplicate clusters via STAR CONTRACTION (Kiveris et al., "
+    "SoCC 2014) pinned: the same pair set and census as "
+    "dedup_clusters_documents, but connected_components is called with "
+    "driver_close_max_edges=0, so the distributed tier always runs "
+    "instead of the driver union-find.  Alternating large-star/"
+    "small-star rounds halve component height, so convergence is "
+    "O(log n) rounds on ANY topology (chained near-dup pairs - "
+    "transcript/frame corpora - form long paths).  Exact fixpoint test "
+    "(count + exceptAll, no probabilistic signature).  The SAME "
+    "recursive-CTE reachability oracle hash-matches the cluster census, "
+    "and pytest pins node-level equality of both tiers against a Python "
+    "union-find, including a 300-link path.",
 )
 def dedup_clusters_contract_documents(spark, sf_dir):
     from crick_spark.pipeline.dedup import jaccard_ngram_pairs
-    from crick_spark.pipeline.graph import connected_components_contract
+    from crick_spark.pipeline.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_ngram_pairs(
         docs, "doc_id", "text", block_col="lang", threshold=0.5, n=3
     )
-    cc = connected_components_contract(pairs, src="id_a", dst="id_b")
+    cc = connected_components(
+        pairs, src="id_a", dst="id_b", driver_close_max_edges=0
+    )
     return cc.groupBy("component").agg(F.count("*").alias("n_docs"))
 
 

@@ -11,17 +11,18 @@ pairs per batch, and this store folds them into a persisted
 Per batch, the closure runs on the CONTRACTED graph only: each new
 pair's endpoints are replaced by their current stored label (or
 themselves if unseen), giving edges between component representatives —
-O(|batch|) edges regardless of history size.  Hash-min propagation over
-that contracted graph (``connected_components``, O(merged-diameter)
-supersteps) yields an old-label → new-label mapping, bounded by the
-batch; applying it to the stored labels is ONE broadcast-mapping join
-(the mapping is batch-sized — bounded by the micro-batch, never by the
-corpus, so the broadcast is legitimate), plus an insert of the batch's
-unseen nodes.  Correctness is exact, not approximate: a stored label is
-the min node id of its component, so min-over-representatives equals
-min-over-members and the incremental labeling is IDENTICAL to a full
-re-closure over the union of all folded pairs (asserted in tests and by
-the registered query's recursive-CTE oracle).
+O(|batch|) edges regardless of history size.  Connected components over
+that contracted graph (``connected_components``'s driver union-find, or
+its star contraction past the edge cap) yields an old-label → new-label
+mapping, bounded by the batch; applying it to the stored labels is ONE
+broadcast-mapping join (the mapping is batch-sized — bounded by the
+micro-batch, never by the corpus, so the broadcast is legitimate), plus
+an insert of the batch's unseen nodes.  Correctness is exact, not
+approximate: a stored label is the min node id of its component, so
+min-over-representatives equals min-over-members and the incremental
+labeling is IDENTICAL to a full re-closure over the union of all folded
+pairs (asserted in tests and by the registered query's recursive-CTE
+oracle).
 
 State layout (r8: bucketed snapshots; r9: O(touched)-READ folds — the
 r8 docstring conceded folds still read the label table O(|labels|)
@@ -70,8 +71,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType
 
-from crick_spark.pipeline.graph import connected_components
+from crick_spark.driver_close import driver_close
+from crick_spark.pipeline.graph import connected_components, min_root_labels
 
 
 class ClusterStore:
@@ -212,14 +215,14 @@ class ClusterStore:
             )
         return res
 
-    # contracted graphs at or under this edge count close driver-side
-    # (one collect + union-find) instead of spinning up the iterative
-    # distributed closure — the mapping those edges produce is ALREADY
-    # batch-bounded and broadcast, so collecting the edges themselves
-    # adds no new scaling assumption; bigger batches fall back to the
-    # distributed hash-min propagation.  200k 2-int edges ≈ 10 MB of
-    # Rows — small enough that the decide-and-use collect below is
-    # never the multi-hundred-MB transfer the r8 1M cap risked
+    # batches (and contracted graphs) at or under this edge count close
+    # driver-side (one Arrow collect + union-find) instead of spinning up
+    # the distributed closure — the mapping those edges produce is
+    # ALREADY batch-bounded and broadcast, so collecting the edges
+    # themselves adds no new scaling assumption; bigger batches fall
+    # back to star contraction.  200k 2-int edges are a few MB — never
+    # the multi-hundred-MB transfer the r8 1M cap risked.  0 forces the
+    # distributed path.
     DRIVER_CLOSE_MAX_EDGES = 200_000
 
     # r15 (guide §5.4 — the remaining per-fold cost was ~8 fixed Spark
@@ -232,55 +235,6 @@ class ClusterStore:
     # driver can always reach the files; a store past the cap — the
     # 100 TB case — keeps the Spark data path for every read and write.
     DRIVER_DATA_MAX_BYTES = 32 * 1024 * 1024
-
-    def _close(self, s: SparkSession, e: DataFrame) -> DataFrame:
-        """(node, component=min id of its component) over contracted
-        edges — driver union-find when the batch is small, distributed
-        hash-min otherwise.  Identical output either way (min-root
-        union preserves the min-label invariant).  ONE
-        ``limit(cap+1).collect()`` both decides the path and feeds the
-        union-find (r9: the first ADVICE fix probed with a separate
-        count, which executed the whole contracted-edge subtree — batch
-        joins against the pruned label read — a second time per fold;
-        bounding the collect at cap+1 rows makes decide-and-use one
-        execution, and the lowered cap keeps the worst-case transfer
-        ~10 MB even on the distributed path)."""
-        cap = self.DRIVER_CLOSE_MAX_EDGES
-        head = e.limit(cap + 1).collect()
-        if len(head) > cap:
-            # already over the driver cap — skip CC's own decide-and-use
-            # collect of the same relation
-            return connected_components(
-                e, src="u", dst="v", driver_close_max_edges=0
-            )
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in head:
-            ra, rb = find(row["u"]), find(row["v"])
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo  # min root wins -> min-label components
-        nodes = {row["u"] for row in head} | {row["v"] for row in head}
-        node_t = e.schema["u"].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        return s.createDataFrame(
-            [(n, find(n)) for n in sorted(nodes)],
-            StructType(
-                [
-                    StructField("node", node_t),
-                    StructField("component", node_t),
-                ]
-            ),
-        )
 
     @staticmethod
     def _local_parquet_files(path: str) -> list[str]:
@@ -360,22 +314,27 @@ class ClusterStore:
             "label_buckets_written": 0,
             "index_partitions_written": 0,
         }
-        # ONE decide-and-use collect for the whole batch (r14, guide
-        # §5.4): a fold's every derived set — endpoint buckets, the
-        # contracted edges, the union-find, the remap mapping, the
-        # new-node rows — is batch-bounded by construction, so when the
-        # normalized batch itself fits the driver-close cap, collecting
-        # it ONCE lets the driver compute all of them in Python instead
-        # of paying one tiny Spark job per set (the pre-r14 fold ran
-        # ~11 scheduling-bound jobs at any batch size).  Bucket ids come
+        # ONE driver close for the whole batch (r14, guide §5.4): a
+        # fold's every derived set — endpoint buckets, the contracted
+        # edges, the union-find, the remap mapping, the new-node rows —
+        # is batch-bounded by construction, so when the normalized batch
+        # itself fits the driver-close cap, collecting it ONCE lets the
+        # driver compute all of them in Python instead of paying one
+        # tiny Spark job per set (the pre-r14 fold ran ~11
+        # scheduling-bound jobs at any batch size).  Bucket ids come
         # from functions/pyhash.spark_xxhash64 — pinned bit-equal to the
-        # engine's pmod(xxhash64(node), n) by test, so both paths file
-        # rows into identical buckets.  Batches over the cap (or with
-        # node types the replica does not cover) keep the distributed
-        # path byte-for-byte.
-        cap = self.DRIVER_CLOSE_MAX_EDGES
-        head = pn.limit(cap + 1).collect()
-        if not head:
+        # engine's pmod(xxhash64(node), n) by test for long and string
+        # ids, so both paths file rows into identical buckets.  Batches
+        # over the cap, or with other node types, take the distributed
+        # path on the same checkpoint.
+        node_t = pn.schema["id_a"].dataType
+        driver_ok = node_t == pn.schema["id_b"].dataType and isinstance(
+            node_t, (LongType, StringType)
+        )
+        p, head = driver_close(
+            pn, self.DRIVER_CLOSE_MAX_EDGES if driver_ok else 0
+        )
+        if head is not None and head.num_rows == 0:
             # an empty (or all-null / all-self-pair) batch folds to a
             # fence: nothing to write — a zero-file generation dir
             # would kill spark.read.parquet schema inference, and the
@@ -383,56 +342,48 @@ class ClusterStore:
             self._commit_meta(s, batch_id, [])
             self.last_fold_stats = stats
             return True
-        if len(head) <= cap and all(
-            type(r["id_a"]) in (int, str) and type(r["id_b"]) in (int, str)
-            for r in head
-        ):
-            from pyspark.sql.types import LongType, StringType
-
-            if isinstance(
-                pn.schema["id_a"].dataType, (LongType, StringType)
-            ) and self._resident_bytes(
-                lab_paths, idx_paths
-            ) <= self.DRIVER_DATA_MAX_BYTES:
-                ok = self._fold_driver_local(
-                    s, head, pn.schema, batch_id, lab_paths, idx_paths, stats
+        if head is not None:
+            batch = list(
+                zip(
+                    head.column("id_a").to_pylist(),
+                    head.column("id_b").to_pylist(),
                 )
-            else:
-                ok = self._fold_driver(
-                    s, head, pn.schema, batch_id, lab_paths, idx_paths, stats
-                )
+            )
+            fold_driver = (
+                self._fold_driver_local
+                if self._resident_bytes(lab_paths, idx_paths)
+                <= self.DRIVER_DATA_MAX_BYTES
+                else self._fold_driver
+            )
+            ok = fold_driver(
+                s, batch, node_t, batch_id, lab_paths, idx_paths, stats
+            )
+        elif lab_paths:
+            ok = self._fold_incremental(
+                s, p, batch_id, lab_paths, idx_paths, stats
+            )
         else:
-            # distributed fallback: materialize the normalized batch
-            # ONCE — it feeds endpoint-bucket discovery, the
-            # contracted-edge build, and the new-node insert
-            p = pn.localCheckpoint(eager=True)
-            if lab_paths:
-                ok = self._fold_incremental(
-                    s, p, batch_id, lab_paths, idx_paths, stats
-                )
-            else:
-                ok = self._fold_initial(s, p, batch_id, stats)
+            ok = self._fold_initial(s, p, batch_id, stats)
         self.last_fold_stats = stats
         return ok
 
     def _fold_driver(
-        self, s, head, schema, batch_id, lab_paths, idx_paths, stats
+        self, s, pairs, node_t, batch_id, lab_paths, idx_paths, stats
     ) -> bool:
         """Fast path of ``fold`` for a batch the driver already holds
-        (``head``: the collected normalized pairs, ≤ cap rows).  Same
-        phases, reads, writes and commit as ``_fold_incremental`` /
-        ``_fold_initial`` — only the batch-bounded bookkeeping (bucket
-        sets, contracted closure, mapping, new-node rows) runs in
-        Python instead of as per-set Spark jobs.  Output is identical:
-        min-root union-find preserves the min-label invariant, and the
-        generation/meta protocol is untouched."""
+        (``pairs``: the collected normalized (id_a, id_b) tuples, ≤ cap
+        rows; ``node_t``: their Spark type).  Same phases, reads, writes
+        and commit as ``_fold_incremental`` / ``_fold_initial`` — only
+        the batch-bounded bookkeeping (bucket sets, contracted closure,
+        mapping, new-node rows) runs in Python instead of as per-set
+        Spark jobs.  Output is identical: min-root union-find preserves
+        the min-label invariant, and the generation/meta protocol is
+        untouched."""
         from pyspark.sql.types import StructField, StructType
 
         from crick_spark.functions.pyhash import spark_xxhash64
 
-        node_t = schema["id_a"].dataType
         nb = self.n_buckets
-        pairs = [(r["id_a"], r["id_b"]) for r in head]
         nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
         bucket_of = {n: spark_xxhash64(n) % nb for n in nodes}
         # 1. endpoint resolution against ONLY the endpoints' buckets
@@ -455,33 +406,11 @@ class ClusterStore:
                     F.broadcast(nodes_df), "node", "left_semi"
                 ).collect()
             }
-        # 2. closure over the CONTRACTED graph, driver-side (same
-        #    min-root union-find as _close's driver branch)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        seen = set()
-        for a, b in pairs:
-            u, v = label.get(a, a), label.get(b, b)
-            if u == v:
-                continue
-            seen.update((u, v))
-            ra, rb = find(u), find(v)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        mapping = {}
-        for x in seen:
-            r = find(x)
-            if r != x:
-                mapping[x] = r
+        # 2. closure over the CONTRACTED graph, driver-side
+        roots = min_root_labels(
+            (label.get(a, a), label.get(b, b)) for a, b in pairs
+        )
+        mapping = {x: r for x, r in roots.items() if r != x}
         new_nodes = [n for n in nodes if n not in label]
         # 3. remap probe via the component index: read ONLY the cindex
         #    partitions of the remapped old ids
@@ -539,10 +468,7 @@ class ClusterStore:
         if new_nodes:
             parts.append(
                 s.createDataFrame(
-                    [
-                        (n, find(n) if n in seen else n)
-                        for n in sorted(new_nodes)
-                    ],
+                    [(n, roots.get(n, n)) for n in sorted(new_nodes)],
                     StructType(
                         [
                             StructField("node", node_t),
@@ -582,7 +508,7 @@ class ClusterStore:
         return True
 
     def _fold_driver_local(
-        self, s, head, schema, batch_id, lab_paths, idx_paths, stats
+        self, s, pairs, node_t, batch_id, lab_paths, idx_paths, stats
     ) -> bool:
         """Fully-local twin of ``_fold_driver`` (r15): the same phases,
         the same rewrite algebra, the same generation layout and
@@ -602,15 +528,12 @@ class ClusterStore:
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.types import LongType
 
         from crick_spark.functions.pyhash import spark_xxhash64
         from crick_spark.streaming.fsutil import strip_file_scheme
 
-        node_t = schema["id_a"].dataType
         pa_node = pa.int64() if isinstance(node_t, LongType) else pa.string()
         nb = self.n_buckets
-        pairs = [(r["id_a"], r["id_b"]) for r in head]
         nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
         nodeset = set(nodes)
         bucket_of = {n: spark_xxhash64(n) % nb for n in nodes}
@@ -629,31 +552,10 @@ class ClusterStore:
                 if n_ in nodeset:
                     label[n_] = c_
         # 2. closure over the CONTRACTED graph (identical union-find)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        seen = set()
-        for a, b in pairs:
-            u, v = label.get(a, a), label.get(b, b)
-            if u == v:
-                continue
-            seen.update((u, v))
-            ra, rb = find(u), find(v)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        mapping = {}
-        for x in seen:
-            r = find(x)
-            if r != x:
-                mapping[x] = r
+        roots = min_root_labels(
+            (label.get(a, a), label.get(b, b)) for a, b in pairs
+        )
+        mapping = {x: r for x, r in roots.items() if r != x}
         new_nodes = [n for n in nodes if n not in label]
         # 3. remap probe via the component index
         bc = {spark_xxhash64(x) % nb for x in mapping}
@@ -697,7 +599,7 @@ class ClusterStore:
         for n_ in sorted(new_nodes):
             nd, cp = rows_by_bucket[bucket_of[n_]]
             nd.append(n_)
-            cp.append(find(n_) if n_ in seen else n_)
+            cp.append(roots.get(n_, n_))
         gen, cgen = self._gen(batch_id), self._cgen(batch_id)
         # clear a crashed attempt's leftovers, as Spark overwrite would
         shutil.rmtree(strip_file_scheme(gen), ignore_errors=True)
@@ -727,13 +629,14 @@ class ClusterStore:
         }
         ic = {spark_xxhash64(c_) % nb for c_, _ in new_pairs}
         retained: set = set()
-        if lab_paths:
-            ic |= bc
+        todo = (ic | bc) if lab_paths else set()
+        ic |= todo
+        while todo:
             stats["index_partitions_read"] += sum(
-                1 for b in ic if idx_paths.get(b) is not None
+                1 for b in todo if idx_paths.get(b) is not None
             )
             to = self._read_buckets_local(
-                idx_paths, ic, ["component", "nbucket"]
+                idx_paths, todo, ["component", "nbucket"]
             )
             if to is not None:
                 for c_, b_ in zip(
@@ -742,6 +645,11 @@ class ClusterStore:
                 ):
                     if c_ is not None and c_ not in mapping:
                         retained.add((c_, int(b_)))
+            # a pair filed outside its component's hash partition (a
+            # damaged index) is re-filed into that partition, which is
+            # then read and rewritten too — the _write_generation rule
+            todo = {spark_xxhash64(c_) % nb for c_, _ in retained} - ic
+            ic |= todo
         by_cb: dict[int, list] = {b: [] for b in sorted(ic)}
         for c_, b_ in new_pairs | retained:
             by_cb[spark_xxhash64(c_) % nb].append((c_, b_))
@@ -778,7 +686,9 @@ class ClusterStore:
 
     def _fold_initial(self, s, p, batch_id, stats) -> bool:
         e = p.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        final = self._close(s, e)
+        final = connected_components(
+            e, "u", "v", driver_close_max_edges=self.DRIVER_CLOSE_MAX_EDGES
+        )
         touched, ic, written_c = self._write_generation(
             s, final, batch_id, None, None
         )
@@ -854,7 +764,9 @@ class ClusterStore:
             new_nodes = ep_nodes
         e = e.where(F.col("u") != F.col("v"))
         # 2. closure over the CONTRACTED graph only: O(|batch|) edges
-        cc = self._close(s, e)
+        cc = connected_components(
+            e, "u", "v", driver_close_max_edges=self.DRIVER_CLOSE_MAX_EDGES
+        )
         mapping = cc.where(F.col("node") != F.col("component")).select(
             F.col("node").alias("__old__"),
             F.col("component").alias("__new__"),
@@ -1218,29 +1130,37 @@ class ClusterStore:
         idx_final = new_pairs.select("component", "nbucket", "cbucket")
         if idx_ctx is not None:
             idx_paths, bc, stats = idx_ctx
-            ic = set(ic) | set(bc)
-            old_idx = self._read_buckets(
-                s, idx_paths, ic, ["component", "nbucket"]
-            )
-            if old_idx is not None:  # drop emptied-bucket sentinel rows
-                # (the anti-join below would KEEP null components — null
-                # never equals __old__ — and _bucket(NULL) would then
-                # misfile them as a real pair forever)
-                old_idx = old_idx.where(F.col("component").isNotNull())
-            stats["index_partitions_read"] += sum(
-                1 for b in ic if idx_paths.get(b) is not None
-            )
-            if old_idx is not None:
+            todo = set(ic) | set(bc)
+            ic = set(ic) | todo
+            while todo:
+                old_idx = self._read_buckets(
+                    s, idx_paths, todo, ["component", "nbucket"]
+                )
+                stats["index_partitions_read"] += sum(
+                    1 for b in todo if idx_paths.get(b) is not None
+                )
+                if old_idx is None:
+                    break
+                # drop emptied-bucket sentinel rows (the anti-join below
+                # would KEEP null components — null never equals __old__
+                # — and _bucket(NULL) would then misfile them as a real
+                # pair forever)
                 retained = (
-                    old_idx.join(
+                    old_idx.where(F.col("component").isNotNull())
+                    .join(
                         F.broadcast(mapping),
-                        old_idx.component == F.col("__old__"),
+                        F.col("component") == F.col("__old__"),
                         "left_anti",
                     )
                     .select("component", "nbucket")
                     .withColumn("cbucket", self._bucket(F.col("component")))
                 )
                 idx_final = idx_final.unionByName(retained).distinct()
+                # a pair filed outside its component's hash partition (a
+                # damaged index) is re-filed into that partition, which
+                # is then read and rewritten too
+                todo = self._distinct_ints(retained, F.col("cbucket")) - ic
+                ic |= todo
         cgen = self._cgen(batch_id)
         # every partition in ic materializes by construction: a bucket
         # the fold EMPTIED (all its old ids remapped away, no new pairs)

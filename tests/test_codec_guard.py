@@ -1,10 +1,13 @@
-"""Static guards on the sketch aggregation layering.
+"""Static guards on the package's single-path decisions.
 
 Every sketch ⇄ bytes crossing goes through ``crick_spark.sketches.codec``,
 so the wire format is decided in one file; the two-phase path lives only
 in ``operators.sketch_agg`` and calls the kernels' ``.merge`` directly.
-These checks read the source (AST, so docstrings and comments that
-mention pickle are fine) and fail if either decision starts spreading."""
+Every bounded driver collect goes through ``crick_spark.driver_close``,
+and connected components has one union-find (``min_root_labels``) and
+one distributed algorithm.  These checks read the source (AST, so
+docstrings and comments are fine) and fail if a decision starts
+spreading again."""
 
 from __future__ import annotations
 
@@ -16,6 +19,19 @@ import numpy as np
 PKG = Path(__file__).resolve().parent.parent / "crick_spark"
 CODEC = PKG / "sketches" / "codec.py"
 RETIRED = {"SketchOps", "GROUP_KEY"}
+RETIRED_CC = {"dup_clusters", "connected_components_contract", "_close"}
+
+
+def _name(node) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return node.name
+    if isinstance(node, ast.alias):
+        return node.asname or node.name
+    return None
 
 
 def _offences(path: Path) -> list[str]:
@@ -29,15 +45,7 @@ def _offences(path: Path) -> list[str]:
         else:
             mods = []
         found += [f"imports {m}" for m in mods if m.split(".")[0] == "pickle"]
-        name = None
-        if isinstance(node, ast.Name):
-            name = node.id
-        elif isinstance(node, ast.Attribute):
-            name = node.attr
-        elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-            name = node.name
-        elif isinstance(node, ast.alias):
-            name = node.asname or node.name
+        name = _name(node)
         if name == "pickle" or name in RETIRED:
             found.append(f"uses {name} (line {node.lineno})")
     return found
@@ -58,6 +66,76 @@ def test_guard_catches_offences(tmp_path):
     src = tmp_path / "m.py"
     src.write_text('"""mentions pickle in a docstring"""\nimport pickle as p\nGROUP_KEY = 1\n')
     assert _offences(src) == ["imports pickle", "uses GROUP_KEY (line 3)"]
+
+
+def _limit_collect(node) -> bool:
+    """``<df>.limit(<expr> + 1).collect()`` or ``.limit(10_001).collect()``
+    — a bounded decide-and-use collect that bypasses driver_close."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "collect"
+        and isinstance(node.func.value, ast.Call)
+        and isinstance(node.func.value.func, ast.Attribute)
+        and node.func.value.func.attr == "limit"
+        and node.func.value.args
+    ):
+        return False
+    arg = node.func.value.args[0]
+    if isinstance(arg, ast.Constant):
+        return arg.value == 10_001
+    return (
+        isinstance(arg, ast.BinOp)
+        and isinstance(arg.op, ast.Add)
+        and any(
+            isinstance(x, ast.Constant) and x.value == 1
+            for x in (arg.left, arg.right)
+        )
+    )
+
+
+def _driver_close_offences(root: Path) -> list[str]:
+    found = []
+    finds = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if _limit_collect(node):
+                found.append(f"{rel}:{node.lineno} limit-collect")
+            if _name(node) in RETIRED_CC:
+                found.append(f"{rel}:{node.lineno} uses {_name(node)}")
+            if isinstance(node, ast.FunctionDef) and node.name == "find":
+                finds.append(f"{rel}:{node.lineno}")
+    if len(finds) > 1:
+        found.append(f"{len(finds)} union-find copies: {finds}")
+    return found
+
+
+def test_one_driver_close_and_one_connected_components():
+    bad = _driver_close_offences(PKG)
+    assert not bad, f"hand-written driver closes or CC copies: {bad}"
+
+
+def test_driver_close_guard_catches_offences(tmp_path):
+    (tmp_path / "a.py").write_text(
+        "def find(x):\n    return x\n"
+        "rows = df.limit(cap + 1).collect()\n"
+        "ids = df.limit(10_001).collect()\n"
+        "ok = df.limit(cap).collect()\n"
+    )
+    (tmp_path / "b.py").write_text(
+        "from m import dup_clusters\n"
+        "def find(y):\n    return y\n"
+        "store._close(e)\n"
+    )
+    assert _driver_close_offences(tmp_path) == [
+        "a.py:3 limit-collect",
+        "a.py:4 limit-collect",
+        "b.py:1 uses dup_clusters",
+        "b.py:4 uses _close",
+        "2 union-find copies: ['a.py:1', 'b.py:2']",
+    ]
 
 
 def test_codec_round_trips_every_kernel():

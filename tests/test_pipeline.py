@@ -3224,6 +3224,41 @@ def test_graph_driver_close_matches_distributed(spark):
     assert sres[0][2] >= 0
 
 
+def test_triangle_driver_close_bounds_wedges(spark, monkeypatch):
+    """The triangle driver twin sums its oriented wedges Σ k(k−1)/2
+    before building any wedge array: with the bound one below K12's
+    C(12,3) = 220 wedges it hands the count back to the distributed
+    wedge join, and the total still equals both the forced-distributed
+    result and C(12,3); at the bound it counts on the driver."""
+    import math
+
+    from crick_spark.pipeline import graph
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(12) for b in range(a + 1, 12)],
+        "src long, dst long",
+    )
+    calls = []
+    kernel = graph._triangle_total_driver
+
+    def spy(a, b):
+        calls.append(kernel(a, b))
+        return calls[-1]
+
+    monkeypatch.setattr(graph, "_triangle_total_driver", spy)
+    dist = graph.approx_triangle_total(
+        edges, p=1.0, driver_close_max_edges=0
+    ).collect()
+    assert calls == []
+    assert dist[0]["t_sampled"] == math.comb(12, 3)
+    monkeypatch.setattr(graph, "TRIANGLE_DRIVER_CLOSE_MAX_WEDGES", 219)
+    assert graph.approx_triangle_total(edges, p=1.0).collect() == dist
+    assert calls == [None]
+    monkeypatch.setattr(graph, "TRIANGLE_DRIVER_CLOSE_MAX_WEDGES", 220)
+    assert graph.approx_triangle_total(edges, p=1.0).collect() == dist
+    assert calls == [None, math.comb(12, 3)]
+
+
 def test_triangle_total_audit_single_traversal_consistency(spark):
     """r14 (VERDICT r13 #7): triangle_total_audit derives the sampled
     count INSIDE the exact traversal — its (t_exact, t_sampled, t_est)
@@ -3455,18 +3490,15 @@ def test_personalized_pagerank_matches_numpy_with_dangling(spark):
     assert got["v0"] > got["v5"]
 
 
-def test_connected_components_contract_matches_hashmin_and_handles_long_paths(spark):
-    """r12: star-contraction CC == union-find ground truth == hash-min CC
-    on a noisy random graph, and converges on a 300-link path in O(log n)
-    rounds — the diameter regime where hash-min's default 25-superstep
-    budget raises."""
+def test_connected_components_tiers_match_union_find_and_handle_long_paths(spark):
+    """Both connected_components tiers — the driver union-find and the
+    forced star contraction (driver_close_max_edges=0) — equal a Python
+    union-find on a noisy random graph, including the self-loop-only
+    node 9, and star contraction converges on a 300-link path (O(log n)
+    rounds where min-label propagation would need 300 supersteps)."""
     import numpy as np
-    import pytest as _pytest
 
-    from crick_spark.pipeline.graph import (
-        connected_components,
-        connected_components_contract,
-    )
+    from crick_spark.pipeline.graph import connected_components
 
     rng = np.random.default_rng(31)
     raw = {
@@ -3492,30 +3524,69 @@ def test_connected_components_contract_matches_hashmin_and_handles_long_paths(sp
     for n in nodes:
         want.setdefault(find(n), []).append(n)
     want_label = {n: min(ns) for r, ns in want.items() for n in ns}
-    want_label[9] = 9  # self-loop-only node labels itself (hash-min parity)
+    want_label[9] = 9  # self-loop-only node labels itself
 
-    got_c = {
-        r["node"]: r["component"]
-        for r in connected_components_contract(edges).collect()
-    }
-    got_h = {
+    got_driver = {
         r["node"]: r["component"] for r in connected_components(edges).collect()
     }
-    assert got_c == want_label
-    assert got_c == got_h
+    got_dist = {
+        r["node"]: r["component"]
+        for r in connected_components(
+            edges, driver_close_max_edges=0
+        ).collect()
+    }
+    assert got_driver == want_label
+    assert got_dist == want_label
 
-    # 300-link path: diameter 300 — hash-min raises at its default
-    # budget, star contraction converges in O(log n) rounds
+    # 300-link path: diameter 300, converges within the default rounds
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], "src long, dst long"
     )
     got_path = {
         r["node"]: r["component"]
-        for r in connected_components_contract(path, max_iter=20).collect()
+        for r in connected_components(
+            path, driver_close_max_edges=0
+        ).collect()
     }
     assert got_path == {i: 0 for i in range(301)}
-    with _pytest.raises(RuntimeError):
-        connected_components(path, max_iter=25, driver_close_max_edges=0)
+
+
+def test_driver_close_decides_on_the_cap_and_runs_the_plan_once(spark):
+    """driver_close returns the collected table exactly when the row
+    count is at most the cap (n, n-1, 0, and an empty frame), returns
+    the checkpoint either way, and executes the input plan once: a
+    Python UDF's accumulator counts every row exactly once per call."""
+    from pyspark.sql import functions as F
+
+    from crick_spark.driver_close import driver_close
+
+    n = 37
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x * 2
+
+    tick_udf = F.udf(tick, "long")
+    base = spark.range(n).repartition(3)
+    for cap, closes in ((n, True), (n - 1, False), (0, False)):
+        acc.value = 0
+        ck, table = driver_close(base.select(tick_udf("id").alias("x")), cap)
+        assert (table is not None) == closes, cap
+        assert acc.value == n, (cap, acc.value)
+        if table is not None:
+            assert sorted(table.column("x").to_pylist()) == [
+                2 * i for i in range(n)
+            ]
+        # the checkpoint is reused downstream without re-running the UDF
+        assert ck.count() == n
+        assert sorted(r["x"] for r in ck.collect())[-1] == 2 * (n - 1)
+        assert acc.value == n, (cap, acc.value)
+    empty = base.where(F.col("id") < 0).select(tick_udf("id").alias("x"))
+    for cap in (0, 5):
+        _, table = driver_close(empty, cap)
+        assert table is not None and table.num_rows == 0
+        assert table.column_names == ["x"]
 
 
 def test_ahash_64_pixel_frames_pack_bit63_as_sign(spark):

@@ -1638,6 +1638,112 @@ def test_cluster_store_local_data_fold_matches_spark_paths(
     )
 
 
+def test_cluster_store_refiles_misfiled_cindex_pair(spark, tmp_path):
+    """A component-index partition holding a pair whose component hashes
+    to ANOTHER partition (a damaged index) must not break a fold: both
+    data tiers — the pyarrow tier and the Spark tier (zero data-byte
+    cap) — re-file the pair into its hash partition, read and rewrite
+    that partition too, and end with identical labels, cindex and stats;
+    the resolved cindex is then exactly the one the labels imply."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crick_spark.functions.pyhash import spark_xxhash64
+    from crick_spark.streaming.cluster_store import ClusterStore
+
+    nb = 8
+
+    def h(x):
+        return spark_xxhash64(x) % nb
+
+    first = [(i, i + 10_000) for i in range(0, 40, 2)]  # 20 components
+    second = [(0, 2)]  # remaps component 2 into 0
+    labels0 = {n: a for a, b in first for n in (a, b)}
+    # the second fold reads the cindex partitions of the remapped id and
+    # of every component with members in the touched label buckets
+    touched = {h(2), h(10_002)}
+    read = {h(2)} | {
+        h(0 if c == 2 else c) for n, c in labels0.items() if h(n) in touched
+    }
+    moved = next(c for c in range(4, 40, 2) if h(c) not in read)
+    pair = (moved, h(moved + 10_000))
+    into = h(2)
+
+    def damage(store):
+        # move one pair of component `moved` from its own partition into
+        # partition h(2)
+        _, _, idx = store.read_meta(spark)
+        for part, keep in ((h(moved), False), (into, True)):
+            (f,) = store._local_parquet_files(idx[part])
+            t = pq.read_table(f)
+            rows = [
+                (c, b)
+                for c, b in zip(
+                    t.column("component").to_pylist(),
+                    t.column("nbucket").to_pylist(),
+                )
+                if (c, b) != pair
+            ]
+            if keep:
+                rows.append(pair)
+            pq.write_table(
+                pa.table(
+                    {
+                        "component": pa.array(
+                            [c for c, _ in rows], pa.int64()
+                        ),
+                        "nbucket": pa.array(
+                            [b for _, b in rows], pa.int32()
+                        ),
+                    }
+                ),
+                f,
+            )
+
+    def cindex(store):
+        _, _, idx = store.read_meta(spark)
+        out = {}
+        for part, path in idx.items():
+            t = store._read_buckets_local(
+                {part: path}, None, ["component", "nbucket"]
+            )
+            if t is None:
+                continue
+            pairs = sorted(
+                (c, b)
+                for c, b in zip(
+                    t.column("component").to_pylist(),
+                    t.column("nbucket").to_pylist(),
+                )
+                if c is not None
+            )
+            if pairs:
+                out[part] = pairs
+        return out
+
+    stores = []
+    for name, data_cap in (("local", None), ("spark", 0)):
+        st = ClusterStore(str(tmp_path / name), n_buckets=nb)
+        assert st.fold(spark.createDataFrame(first, "id_a long, id_b long"), 0)
+        damage(st)
+        assert pair in cindex(st)[into]
+        if data_cap is not None:
+            st.DRIVER_DATA_MAX_BYTES = data_cap
+        batch = spark.createDataFrame(second, "id_a long, id_b long")
+        assert st.fold(batch, 1)
+        stores.append(st)
+    local, sp = stores
+    assert local.last_fold_stats == sp.last_fold_stats
+    got = sorted(map(tuple, local.labels(spark).collect()))
+    assert got == sorted(map(tuple, sp.labels(spark).collect()))
+    assert got == sorted((n, 0 if c == 2 else c) for n, c in labels0.items())
+    want = {}
+    for n, c in got:
+        want.setdefault(h(c), set()).add((c, h(n)))
+    want = {k: sorted(v) for k, v in want.items()}
+    assert cindex(local) == cindex(sp) == want
+
+
 def test_cluster_store_empty_first_batch_commits_fence(spark, tmp_path):
     """r10 ADVICE: an empty (or all-null / all-self-pair) FIRST batch
     must commit the replay fence and return, not write a zero-file
