@@ -306,7 +306,7 @@ def spacesaving_topk(
 ) -> DataFrame:
     """Approximate top-k with per-item error bounds (crick
     ``SpaceSaving.topk``): rows (by…, item, cnt, error) where
-    ``cnt ≤ actual ≤ cnt + error``; item keeps the input column's type."""
+    ``cnt − error ≤ actual ≤ cnt``; item keeps the input column's type."""
     item_field = StructField("item", df.schema[col].dataType)
     schema = StructType(
         [item_field, StructField("cnt", LongType()), StructField("error", LongType())]

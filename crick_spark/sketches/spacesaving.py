@@ -16,8 +16,9 @@ NOT a port: the C processes one item at a time through a khash + intrusive
 count-sorted linked list.  Here a batch is first *exactly* counted
 (vectorized ``np.unique``), then the grouped counts are folded in
 descending order — equivalent to ``add(item, count)`` of the grouped stream
-— so per-batch work is one sort over *distinct* items, and state stays a
-plain dict of ≤ capacity entries.  The weighted-eviction quirk the survey
+— so per-batch work is one sort over the d *distinct* items plus an
+O(d log capacity) min-heap fold, and state stays a plain dict of
+≤ capacity entries.  The weighted-eviction quirk the survey
 flags (full summary ignores the increment's count,
 ``space_saving_stubs.c.in:229-231``) is NOT replicated: eviction inserts
 with ``evicted + count`` per the documented "count observations" semantics.
@@ -39,6 +40,7 @@ from __future__ import annotations
 
 import heapq
 from dataclasses import dataclass, field
+from itertools import islice
 
 import numpy as np
 
@@ -73,25 +75,29 @@ class SpaceSaving:
             uniq, inv = np.unique(items, return_inverse=True)
             cnt = np.bincount(inv, weights=counts).astype(np.int64)
         order = np.argsort(-cnt, kind="stable")
+        # descending fold of the grouped stream (crick's ``add(item,
+        # count)``, space_saving_stubs.c.in:213-250): the first
+        # ``capacity`` distinct items fill the summary, every later one
+        # evicts the (count, _ord) minimum and enters with
+        # ``evicted + count`` / error ``evicted``.  One min-heap of
+        # (count, _ord(item), step, item, error) finds each victim in
+        # O(log capacity); ascending ``step`` is the dict order a
+        # sequential add leaves (the evicted item deleted, the new one
+        # appended).
+        pairs = zip(uniq[order].tolist(), cnt[order].tolist())
+        heap = [
+            (c, _ord(it), j, it, 0)
+            for j, (it, c) in enumerate(islice(pairs, self.capacity))
+        ]
+        heapq.heapify(heap)
+        for j, (it, c) in enumerate(pairs, start=len(heap)):
+            m = heap[0][0]
+            heapq.heapreplace(heap, (m + c, _ord(it), j, it, m))
         batch = SpaceSaving(capacity=self.capacity)
-        for it, c in zip(uniq[order].tolist(), cnt[order].tolist()):
-            batch._add_grouped(it, int(c))
+        batch.counters = {
+            it: (c, e) for c, _, _, it, e in sorted(heap, key=lambda h: h[2])
+        }
         self.counters = self.merge(batch).counters
-
-    def _add_grouped(self, item, count: int) -> None:
-        """``add(item, count)`` for one distinct item
-        (crick/space_saving_stubs.c.in:213-250)."""
-        cur = self.counters.get(item)
-        if cur is not None:
-            self.counters[item] = (cur[0] + count, cur[1])
-        elif len(self.counters) < self.capacity:
-            self.counters[item] = (count, 0)
-        else:
-            evict_item, (m, _) = min(
-                self.counters.items(), key=lambda kv: (kv[1][0], _ord(kv[0]))
-            )
-            del self.counters[evict_item]
-            self.counters[item] = (m + count, m)
 
     # -- merge (Cafaro et al., space_saving_stubs.c.in:289-364) ------------
     def merge(self, *others: "SpaceSaving") -> "SpaceSaving":
@@ -136,8 +142,11 @@ class SpaceSaving:
 
 
 def _ord(item):
-    """Deterministic tie-break key across item types."""
-    return (str(type(item).__name__), item)
+    """Deterministic tie-break key across item types: a total order, NaN
+    after every other float (``nan < x`` and ``x < nan`` are both false,
+    so a bare float key would leave min/sort/heap order to scan order)."""
+    nan = item != item
+    return (type(item).__name__, nan, 0.0 if nan else item)
 
 
 def _merge2(a: dict, b: dict, capacity: int) -> dict:

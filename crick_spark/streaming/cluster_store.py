@@ -1001,7 +1001,8 @@ class ClusterStore:
         # cindex surgery: drop every pair of a relabeled/erased old id
         # (those pairs carry the forgotten id), add the new labels'
         # pairs (complete: all their members live in the rewritten
-        # buckets).  Partitions to rewrite = cbuckets of old + new ids.
+        # buckets).  Partitions to rewrite = cbuckets of old + new ids,
+        # plus the hash partition of any retained pair filed elsewhere.
         meta_rows = [
             (
                 "labels",
@@ -1015,25 +1016,32 @@ class ClusterStore:
             ic = self._distinct_ints(
                 relabel_old_df, self._bucket(F.col("component"))
             ) | self._distinct_ints(new_ids, self._bucket(F.col("component")))
-            old_idx = self._read_buckets(
-                s, idx_paths, ic, ["component", "nbucket"]
-            )
-            new_pairs = (
+            idx_final = (
                 out.join(F.broadcast(new_ids), "component", "left_semi")
                 .select("component", F.col("bucket").alias("nbucket"))
                 .distinct()
+                .withColumn("cbucket", self._bucket(F.col("component")))
             )
-            idx_final = new_pairs
-            if old_idx is not None:
+            todo = set(ic)
+            while todo:
+                old_idx = self._read_buckets(
+                    s, idx_paths, todo, ["component", "nbucket"]
+                )
+                if old_idx is None:
+                    break
                 retained = (
                     old_idx.where(F.col("component").isNotNull())
                     .join(F.broadcast(relabel_old_df), "component", "left_anti")
                     .select("component", "nbucket")
+                    .withColumn("cbucket", self._bucket(F.col("component")))
                 )
                 idx_final = idx_final.unionByName(retained)
-            idx_final = idx_final.withColumn(
-                "cbucket", self._bucket(F.col("component"))
-            )
+                # a pair filed outside its component's hash partition (a
+                # damaged index) is re-filed into that partition, which
+                # is then read (its old pairs kept) and rewritten too —
+                # the fold tiers' rule
+                todo = self._distinct_ints(retained, F.col("cbucket")) - ic
+                ic |= todo
             # sentinel per rewritten partition (the fold convention):
             # written partitions == ic, readers drop component-NULL rows
             from pyspark.sql.types import IntegerType, StructField, StructType

@@ -30,12 +30,18 @@ QS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 
 @pytest.fixture(scope="module")
 def lineitem(spark):
-    return load_table(spark, SF_SMALL, "lineitem").cache()
+    df = load_table(spark, SF_SMALL, "lineitem").cache()
+    yield df
+    # later modules plan over the same scan; a cached relation would
+    # replace their file scans with in-memory scans
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def events(spark):
-    return load_table(spark, SF_SMALL, "events").cache()
+    df = load_table(spark, SF_SMALL, "events").cache()
+    yield df
+    df.unpersist()
 
 
 def test_tdigest_quantiles_accuracy_vs_exact(spark, lineitem):

@@ -1638,6 +1638,61 @@ def test_cluster_store_local_data_fold_matches_spark_paths(
     )
 
 
+def _move_cindex_pair(spark, store, pair, frm, into):
+    """Damage a ClusterStore's component index: move ``pair`` out of
+    partition ``frm`` (its hash partition) into partition ``into``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, _, idx = store.read_meta(spark)
+    for part, keep in ((frm, False), (into, True)):
+        (f,) = store._local_parquet_files(idx[part])
+        t = pq.read_table(f)
+        rows = [
+            (c, b)
+            for c, b in zip(
+                t.column("component").to_pylist(),
+                t.column("nbucket").to_pylist(),
+            )
+            if (c, b) != pair
+        ]
+        if keep:
+            rows.append(pair)
+        pq.write_table(
+            pa.table(
+                {
+                    "component": pa.array([c for c, _ in rows], pa.int64()),
+                    "nbucket": pa.array([b for _, b in rows], pa.int32()),
+                }
+            ),
+            f,
+        )
+
+
+def _cindex_pairs(spark, store):
+    """{cindex partition: sorted (component, nbucket) pairs} as meta
+    resolves it (sentinel rows and empty partitions dropped)."""
+    _, _, idx = store.read_meta(spark)
+    out = {}
+    for part, path in idx.items():
+        t = store._read_buckets_local(
+            {part: path}, None, ["component", "nbucket"]
+        )
+        if t is None:
+            continue
+        pairs = sorted(
+            (c, b)
+            for c, b in zip(
+                t.column("component").to_pylist(),
+                t.column("nbucket").to_pylist(),
+            )
+            if c is not None
+        )
+        if pairs:
+            out[part] = pairs
+    return out
+
+
 def test_cluster_store_refiles_misfiled_cindex_pair(spark, tmp_path):
     """A component-index partition holding a pair whose component hashes
     to ANOTHER partition (a damaged index) must not break a fold: both
@@ -1645,9 +1700,6 @@ def test_cluster_store_refiles_misfiled_cindex_pair(spark, tmp_path):
     cap) — re-file the pair into its hash partition, read and rewrite
     that partition too, and end with identical labels, cindex and stats;
     the resolved cindex is then exactly the one the labels imply."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from crick_spark.functions.pyhash import spark_xxhash64
     from crick_spark.streaming.cluster_store import ClusterStore
 
@@ -1672,54 +1724,10 @@ def test_cluster_store_refiles_misfiled_cindex_pair(spark, tmp_path):
     def damage(store):
         # move one pair of component `moved` from its own partition into
         # partition h(2)
-        _, _, idx = store.read_meta(spark)
-        for part, keep in ((h(moved), False), (into, True)):
-            (f,) = store._local_parquet_files(idx[part])
-            t = pq.read_table(f)
-            rows = [
-                (c, b)
-                for c, b in zip(
-                    t.column("component").to_pylist(),
-                    t.column("nbucket").to_pylist(),
-                )
-                if (c, b) != pair
-            ]
-            if keep:
-                rows.append(pair)
-            pq.write_table(
-                pa.table(
-                    {
-                        "component": pa.array(
-                            [c for c, _ in rows], pa.int64()
-                        ),
-                        "nbucket": pa.array(
-                            [b for _, b in rows], pa.int32()
-                        ),
-                    }
-                ),
-                f,
-            )
+        _move_cindex_pair(spark, store, pair, h(moved), into)
 
     def cindex(store):
-        _, _, idx = store.read_meta(spark)
-        out = {}
-        for part, path in idx.items():
-            t = store._read_buckets_local(
-                {part: path}, None, ["component", "nbucket"]
-            )
-            if t is None:
-                continue
-            pairs = sorted(
-                (c, b)
-                for c, b in zip(
-                    t.column("component").to_pylist(),
-                    t.column("nbucket").to_pylist(),
-                )
-                if c is not None
-            )
-            if pairs:
-                out[part] = pairs
-        return out
+        return _cindex_pairs(spark, store)
 
     stores = []
     for name, data_cap in (("local", None), ("spark", 0)):
@@ -1742,6 +1750,45 @@ def test_cluster_store_refiles_misfiled_cindex_pair(spark, tmp_path):
         want.setdefault(h(c), set()).add((c, h(n)))
     want = {k: sorted(v) for k, v in want.items()}
     assert cindex(local) == cindex(sp) == want
+
+
+def test_cluster_store_delete_refiles_misfiled_cindex_pair(spark, tmp_path):
+    """``delete`` keeps the pairs of components it does not relabel; one
+    filed outside its component's hash partition (a damaged index) in a
+    partition the delete rewrites is re-filed into its hash partition,
+    which is read (its old pairs kept), rewritten and recorded in meta —
+    after one delete the cindex is exactly the one the labels imply."""
+    from crick_spark.functions.pyhash import spark_xxhash64
+    from crick_spark.streaming.cluster_store import ClusterStore
+
+    nb = 8
+
+    def h(x):
+        return spark_xxhash64(x) % nb
+
+    first = [(i, i + 10_000) for i in range(0, 40, 2)]  # 20 components
+    labels0 = {n: a for a, b in first for n in (a, b)}
+    # erasing node 2 relabels component 2 to 10_002: the delete rewrites
+    # the cindex partitions of both ids
+    rewritten = {h(2), h(10_002)}
+    moved = next(c for c in range(4, 40, 2) if h(c) not in rewritten)
+    pair = (moved, h(moved + 10_000))
+    st = ClusterStore(str(tmp_path / "store"), n_buckets=nb)
+    assert st.fold(spark.createDataFrame(first, "id_a long, id_b long"), 0)
+    _move_cindex_pair(spark, st, pair, h(moved), h(2))
+    damaged = _cindex_pairs(spark, st)
+    assert pair in damaged[h(2)] and pair not in damaged.get(h(moved), [])
+    stats = st.delete(spark.createDataFrame([(2,)], "node long"), 1)
+    assert stats["n_deleted"] == stats["n_relabeled_components"] == 1
+    assert stats["index_partitions_written"] == len(rewritten | {h(moved)})
+    got = sorted(map(tuple, st.labels(spark).collect()))
+    assert got == sorted(
+        (n, 10_002 if c == 2 else c) for n, c in labels0.items() if n != 2
+    )
+    want = {}
+    for n, c in got:
+        want.setdefault(h(c), set()).add((c, h(n)))
+    assert _cindex_pairs(spark, st) == {k: sorted(v) for k, v in want.items()}
 
 
 def test_cluster_store_empty_first_batch_commits_fence(spark, tmp_path):
