@@ -190,12 +190,9 @@ FROM events GROUP BY event_type
     "at every tested SF — 1,500 at sf0.1) the top-5 count MULTISET must "
     "equal the exact "
     "top-5 counts — multiset, not items, so boundary ties cannot flap "
-    "the hash.  The Spark 4.x transformWithStateInPandas ports exist "
-    "(sketch_state.spacesaving_stream_topk_tws; session-timer and "
-    "TTL'd-sketch forms in streaming/tws_state.py, r14) with their "
-    "logic mock-verified and e2e probe-gated on the protobuf runtime "
-    "this container lacks — this applyInPandasWithState form stays "
-    "the proven gate path.",
+    "the hash.  applyInPandasWithState is the engine's one streaming "
+    "state API (no transformWithStateInPandas form is kept: it needs a "
+    "protobuf runtime the engine does not ship).",
 )
 def spacesaving_stream_topk_q(spark, sf_dir):
     import uuid as _uuid

@@ -33,12 +33,14 @@ analog (SQL values are always hashable scalars) and is intentionally not
 replicated.  Float keys group by value (numpy semantics), not by bit
 pattern — so unlike crick, ``-0.0 == 0.0`` and NaNs do not self-group;
 this matches Spark GROUP BY's normalization and is the documented delta
-(SURVEY §1.2).
+(SURVEY §1.2).  All NaNs are ONE item, as in a Spark GROUP BY: every merge
+maps NaN keys to one canonical key (``_one_nan``).
 """
 
 from __future__ import annotations
 
 import heapq
+import math
 from dataclasses import dataclass, field
 from itertools import islice
 
@@ -149,7 +151,27 @@ def _ord(item):
     return (type(item).__name__, nan, 0.0 if nan else item)
 
 
+def _one_nan(d: dict) -> dict:
+    """``d`` with every NaN key replaced by the one object ``math.nan``
+    (counts and errors of several NaN keys summed, kept at the first
+    one's position); ``d`` itself when it has no other NaN key.  Every
+    NaN float is its own object and unequal to itself, so a dict finds
+    a NaN key only by identity: two summaries' NaNs (or a summary's and
+    a new batch's) would otherwise stay separate counters."""
+    if all(k == k or k is math.nan for k in d):
+        return d
+    out: dict = {}
+    for k, (c, e) in d.items():
+        if k != k:
+            k = math.nan
+            if k in out:
+                c, e = out[k][0] + c, out[k][1] + e
+        out[k] = (c, e)
+    return out
+
+
 def _merge2(a: dict, b: dict, capacity: int) -> dict:
+    a, b = _one_nan(a), _one_nan(b)
     ma = min((c for c, _ in a.values()), default=0) if len(a) >= capacity else 0
     mb = min((c for c, _ in b.values()), default=0) if len(b) >= capacity else 0
     out = {}

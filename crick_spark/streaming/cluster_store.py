@@ -61,6 +61,16 @@ Superseded generation directories accumulate one per fold and hold only
 that fold's touched buckets; ``vacuum()`` drops the ones no meta row
 references.
 
+Two fold tiers, chosen once per fold in ``fold`` before the batch is
+collected: when the node ids are long/string of one type and the
+store's resident snapshot bytes fit ``DRIVER_DATA_MAX_BYTES``, a batch
+of at most ``DRIVER_CLOSE_MAX_EDGES`` pairs is collected once and folds
+through pyarrow with zero Spark jobs (``_fold_driver_local``); every
+other fold runs on Spark over the batch checkpoint ``driver_close``
+returns (``_fold_incremental``, which also folds the first batch: an
+empty store is one whose bucket reads find no file).  Both tiers write
+the same generations, meta rows and ``last_fold_stats`` (tested).
+
 ``delete`` (r14) completes the right-to-be-forgotten story across the
 persisted dedup artifacts (VERDICT r13 #2): node erasure with
 representative relabeling, same generation + meta commit protocol, same
@@ -215,25 +225,24 @@ class ClusterStore:
             )
         return res
 
-    # batches (and contracted graphs) at or under this edge count close
-    # driver-side (one Arrow collect + union-find) instead of spinning up
-    # the distributed closure — the mapping those edges produce is
-    # ALREADY batch-bounded and broadcast, so collecting the edges
-    # themselves adds no new scaling assumption; bigger batches fall
-    # back to star contraction.  200k 2-int edges are a few MB — never
-    # the multi-hundred-MB transfer the r8 1M cap risked.  0 forces the
-    # distributed path.
+    # a batch of at most this many normalized pairs is collected once
+    # and folds on the local tier (when ``fold``'s type and
+    # DRIVER_DATA_MAX_BYTES checks also pass); a bigger one folds on
+    # Spark, whose closure over the contracted graph uses the same cap
+    # for connected_components' driver union-find (star contraction
+    # past it).  The mapping those edges produce is ALREADY
+    # batch-bounded and broadcast, so collecting the edges adds no new
+    # scaling assumption; 200k 2-int edges are a few MB.  0 forces the
+    # Spark tier with star contraction.
     DRIVER_CLOSE_MAX_EDGES = 200_000
 
-    # r15 (guide §5.4 — the remaining per-fold cost was ~8 fixed Spark
-    # jobs of bucket parquet reads/writes): when the store's RESIDENT
-    # data (current label + cindex snapshot files) fits this many
-    # bytes, a driver-held batch folds through a pure pyarrow data
-    # path — same reads, same rewrite algebra, same generation layout,
-    # same meta-last commit, zero Spark jobs.  The store is
-    # local-scheme-only by construction (constructor guard), so the
-    # driver can always reach the files; a store past the cap — the
-    # 100 TB case — keeps the Spark data path for every read and write.
+    # the local tier's second condition, checked in ``fold`` before the
+    # driver close: the store's RESIDENT data (current label + cindex
+    # snapshot files) fits this many bytes.  The local tier turns the
+    # touched buckets into Python rows, so past the cap — the 100 TB
+    # case — every fold runs on Spark, whatever the batch size.  The
+    # store is local-scheme-only by construction (constructor guard),
+    # so the driver can always reach the files.
     DRIVER_DATA_MAX_BYTES = 32 * 1024 * 1024
 
     @staticmethod
@@ -314,214 +323,60 @@ class ClusterStore:
             "label_buckets_written": 0,
             "index_partitions_written": 0,
         }
-        # ONE driver close for the whole batch (r14, guide §5.4): a
-        # fold's every derived set — endpoint buckets, the contracted
-        # edges, the union-find, the remap mapping, the new-node rows —
-        # is batch-bounded by construction, so when the normalized batch
-        # itself fits the driver-close cap, collecting it ONCE lets the
-        # driver compute all of them in Python instead of paying one
-        # tiny Spark job per set (the pre-r14 fold ran ~11
-        # scheduling-bound jobs at any batch size).  Bucket ids come
-        # from functions/pyhash.spark_xxhash64 — pinned bit-equal to the
-        # engine's pmod(xxhash64(node), n) by test for long and string
-        # ids, so both paths file rows into identical buckets.  Batches
-        # over the cap, or with other node types, take the distributed
-        # path on the same checkpoint.
+        # ONE tier decision per fold, made before the driver close: the
+        # local tier needs long/string ids of one type (the types
+        # functions/pyhash.spark_xxhash64 files bit-equal to the engine's
+        # pmod(xxhash64(node), n), pinned by test) and a resident store
+        # within DRIVER_DATA_MAX_BYTES; then a batch within the edge cap
+        # is collected once and every batch-bounded set (endpoint
+        # buckets, contracted edges, union-find, mapping, new-node rows)
+        # is computed in Python.  Any other fold runs on Spark from the
+        # checkpoint driver_close returns.
         node_t = pn.schema["id_a"].dataType
-        driver_ok = node_t == pn.schema["id_b"].dataType and isinstance(
-            node_t, (LongType, StringType)
+        local = (
+            node_t == pn.schema["id_b"].dataType
+            and isinstance(node_t, (LongType, StringType))
+            and self._resident_bytes(lab_paths, idx_paths)
+            <= self.DRIVER_DATA_MAX_BYTES
         )
-        p, head = driver_close(
-            pn, self.DRIVER_CLOSE_MAX_EDGES if driver_ok else 0
-        )
-        if head is not None and head.num_rows == 0:
+        p, head = driver_close(pn, self.DRIVER_CLOSE_MAX_EDGES if local else 0)
+        if head is None:
+            self._fold_incremental(s, p, batch_id, lab_paths, idx_paths, stats)
+        elif head.num_rows == 0:
             # an empty (or all-null / all-self-pair) batch folds to a
             # fence: nothing to write — a zero-file generation dir
             # would kill spark.read.parquet schema inference, and the
             # replay guard must still advance
             self._commit_meta(s, batch_id, [])
-            self.last_fold_stats = stats
-            return True
-        if head is not None:
+        else:
             batch = list(
                 zip(
                     head.column("id_a").to_pylist(),
                     head.column("id_b").to_pylist(),
                 )
             )
-            fold_driver = (
-                self._fold_driver_local
-                if self._resident_bytes(lab_paths, idx_paths)
-                <= self.DRIVER_DATA_MAX_BYTES
-                else self._fold_driver
-            )
-            ok = fold_driver(
+            self._fold_driver_local(
                 s, batch, node_t, batch_id, lab_paths, idx_paths, stats
             )
-        elif lab_paths:
-            ok = self._fold_incremental(
-                s, p, batch_id, lab_paths, idx_paths, stats
-            )
-        else:
-            ok = self._fold_initial(s, p, batch_id, stats)
         self.last_fold_stats = stats
-        return ok
-
-    def _fold_driver(
-        self, s, pairs, node_t, batch_id, lab_paths, idx_paths, stats
-    ) -> bool:
-        """Fast path of ``fold`` for a batch the driver already holds
-        (``pairs``: the collected normalized (id_a, id_b) tuples, ≤ cap
-        rows; ``node_t``: their Spark type).  Same phases, reads, writes
-        and commit as ``_fold_incremental`` / ``_fold_initial`` — only
-        the batch-bounded bookkeeping (bucket sets, contracted closure,
-        mapping, new-node rows) runs in Python instead of as per-set
-        Spark jobs.  Output is identical: min-root union-find preserves
-        the min-label invariant, and the generation/meta protocol is
-        untouched."""
-        from pyspark.sql.types import StructField, StructType
-
-        from crick_spark.functions.pyhash import spark_xxhash64
-
-        nb = self.n_buckets
-        nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
-        bucket_of = {n: spark_xxhash64(n) % nb for n in nodes}
-        # 1. endpoint resolution against ONLY the endpoints' buckets
-        be = set(bucket_of.values())
-        stats["label_buckets_read"] += sum(
-            1 for b in be if lab_paths.get(b) is not None
-        )
-        label: dict = {}
-        ep_labels = self._read_buckets(
-            s, lab_paths, be, ["node", "component"]
-        )
-        if ep_labels is not None:
-            nodes_df = s.createDataFrame(
-                [(n,) for n in nodes],
-                StructType([StructField("node", node_t)]),
-            )
-            label = {
-                r["node"]: r["component"]
-                for r in ep_labels.join(
-                    F.broadcast(nodes_df), "node", "left_semi"
-                ).collect()
-            }
-        # 2. closure over the CONTRACTED graph, driver-side
-        roots = min_root_labels(
-            (label.get(a, a), label.get(b, b)) for a, b in pairs
-        )
-        mapping = {x: r for x, r in roots.items() if r != x}
-        new_nodes = [n for n in nodes if n not in label]
-        # 3. remap probe via the component index: read ONLY the cindex
-        #    partitions of the remapped old ids
-        bc = {spark_xxhash64(x) % nb for x in mapping}
-        stats["index_partitions_read"] += sum(
-            1 for b in bc if idx_paths.get(b) is not None
-        )
-        remap_bkts: set[int] = set()
-        idx = self._read_buckets(s, idx_paths, bc, ["component", "nbucket"])
-        if idx is not None and mapping:
-            old_df = s.createDataFrame(
-                [(x,) for x in sorted(mapping)],
-                StructType([StructField("component", node_t)]),
-            )
-            remap_bkts = {
-                int(r["nbucket"])
-                for r in idx.where(F.col("component").isNotNull())
-                .join(F.broadcast(old_df), "component", "left_semi")
-                .select("nbucket")
-                .distinct()
-                .collect()
-            }
-        new_bkts = {bucket_of[n] for n in new_nodes}
-        touched = sorted(remap_bkts | new_bkts)
-        if not touched:
-            # within-component pairs only: nothing changes — commit a
-            # fence sentinel so the replay guard still advances
-            self._commit_meta(s, batch_id, [])
-            return True
-        # 4. rewrite ONLY the touched label buckets
-        mapping_df = s.createDataFrame(
-            [(o, t) for o, t in sorted(mapping.items())],
-            StructType(
-                [StructField("__old__", node_t), StructField("__new__", node_t)]
-            ),
-        )
-        touched_labels = self._read_buckets(
-            s, lab_paths, set(touched), ["node", "component"]
-        )
-        stats["label_buckets_read"] += sum(
-            1 for b in touched if lab_paths.get(b) is not None
-        )
-        parts = []
-        if touched_labels is not None:
-            parts.append(
-                touched_labels.join(
-                    F.broadcast(mapping_df),
-                    touched_labels.component == F.col("__old__"),
-                    "left",
-                ).select(
-                    "node",
-                    F.coalesce("__new__", "component").alias("component"),
-                )
-            )
-        if new_nodes:
-            parts.append(
-                s.createDataFrame(
-                    [(n, roots.get(n, n)) for n in sorted(new_nodes)],
-                    StructType(
-                        [
-                            StructField("node", node_t),
-                            StructField("component", node_t),
-                        ]
-                    ),
-                )
-            )
-        final = parts[0]
-        for extra in parts[1:]:
-            final = final.unionByName(extra)
-        idx_ctx = (idx_paths, bc, stats) if lab_paths else None
-        touched_w, ic, written_c = self._write_generation(
-            s,
-            final,
-            batch_id,
-            mapping_df if lab_paths else None,
-            idx_ctx,
-            known_touched=touched,
-        )
-        stats["label_buckets_written"] = len(touched_w)
-        stats["index_partitions_written"] = len(ic)
-        gen, cgen = self._gen(batch_id), self._cgen(batch_id)
-        self._commit_meta(
-            s,
-            batch_id,
-            [("labels", b, f"{gen}/bucket={b}") for b in touched_w]
-            + [
-                (
-                    "cindex",
-                    b,
-                    f"{cgen}/cbucket={b}" if b in written_c else "",
-                )
-                for b in ic
-            ],
-        )
         return True
 
     def _fold_driver_local(
         self, s, pairs, node_t, batch_id, lab_paths, idx_paths, stats
-    ) -> bool:
-        """Fully-local twin of ``_fold_driver`` (r15): the same phases,
-        the same rewrite algebra, the same generation layout and
-        meta-last commit — but every bucket read and write is a driver
-        pyarrow call instead of a Spark job (~8 fixed jobs per fold at
-        any batch size).  Eligible only when the store's resident
-        snapshot bytes fit ``DRIVER_DATA_MAX_BYTES`` (checked by the
-        caller) and node ids are long/string; the store is local-scheme
-        by construction, so the files are always driver-reachable.
-        Crash semantics unchanged: generation dirs are (re)written
-        first — a retry of a crashed fold clears its own generation
-        dirs exactly as Spark's overwrite mode would — and meta commits
-        last, so readers never surface a partial fold."""
+    ):
+        """The local tier of ``fold`` for a batch the driver holds
+        (``pairs``: the collected normalized (id_a, id_b) tuples;
+        ``node_t``: their Spark type, long or string): the phases,
+        rewrite algebra, generation layout and meta-last commit of
+        ``_fold_incremental``, with the batch-bounded bookkeeping in
+        Python and every bucket read and write a driver pyarrow call
+        (zero Spark jobs).  Min-root union-find preserves the min-label
+        invariant, so both tiers write identical labels.  The store is
+        local-scheme by construction, so the files are always
+        driver-reachable.  Crash semantics: generation dirs are
+        (re)written first — a retry of a crashed fold clears its own
+        generation dirs exactly as Spark's overwrite mode would — and
+        meta commits last, so readers never surface a partial fold."""
         import os
         import shutil
         import uuid
@@ -575,7 +430,7 @@ class ClusterStore:
         touched = sorted(remap_bkts | new_bkts)
         if not touched:
             self._commit_meta(s, batch_id, [])
-            return True
+            return
         # 4. rewrite ONLY the touched label buckets
         stats["label_buckets_read"] += sum(
             1 for b in touched if lab_paths.get(b) is not None
@@ -618,7 +473,6 @@ class ClusterStore:
                     d, f"part-00000-{uuid.uuid4().hex}.parquet"
                 ),
             )
-        stats["label_buckets_written"] = len(touched)
         # 5. component-index delta: drop remapped-away old ids' pairs,
         #    union the rewritten buckets' fresh pairs (same algebra and
         #    the same partitions-to-rewrite set as _write_generation)
@@ -675,45 +529,12 @@ class ClusterStore:
                     d, f"part-00000-{uuid.uuid4().hex}.parquet"
                 ),
             )
-        stats["index_partitions_written"] = len(ic)
-        self._commit_meta(
-            s,
-            batch_id,
-            [("labels", b, f"{gen}/bucket={b}") for b in touched]
-            + [("cindex", b, f"{cgen}/cbucket={b}") for b in sorted(ic)],
-        )
-        return True
+        self._commit_generation(s, batch_id, touched, sorted(ic), stats)
 
-    def _fold_initial(self, s, p, batch_id, stats) -> bool:
-        e = p.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        final = connected_components(
-            e, "u", "v", driver_close_max_edges=self.DRIVER_CLOSE_MAX_EDGES
-        )
-        touched, ic, written_c = self._write_generation(
-            s, final, batch_id, None, None
-        )
-        stats["label_buckets_written"] = len(touched)
-        stats["index_partitions_written"] = len(ic)
-        self._commit_meta(
-            s,
-            batch_id,
-            [("labels", b, f"{self._gen(batch_id)}/bucket={b}") for b in touched]
-            + [
-                (
-                    "cindex",
-                    b,
-                    f"{self._cgen(batch_id)}/cbucket={b}"
-                    if b in written_c
-                    else "",
-                )
-                for b in ic
-            ],
-        )
-        return True
-
-    def _fold_incremental(
-        self, s, p, batch_id, lab_paths, idx_paths, stats
-    ) -> bool:
+    def _fold_incremental(self, s, p, batch_id, lab_paths, idx_paths, stats):
+        """The Spark tier of ``fold`` over the checkpointed, non-empty
+        batch ``p``; an empty store is the case where no bucket read
+        finds a file."""
         # 1. endpoint resolution against ONLY the buckets the batch's
         #    endpoints hash into — a stored node lives nowhere else.
         #    Materialized once: consumed by the bucket-set collect, the
@@ -731,13 +552,6 @@ class ClusterStore:
         stats["label_buckets_read"] += sum(
             1 for b in be if lab_paths.get(b) is not None
         )
-        if not be:
-            # empty (or all-null / all-self-pair) batch: the endpoint
-            # set is empty, so nothing can change — fence-only commit.
-            # Derived from the bucket-discovery collect above, not a
-            # dedicated take(1) job (r10 VERDICT claw-back)
-            self._commit_meta(s, batch_id, [])
-            return True
         if ep_labels is not None:
             la = ep_labels.select(
                 F.col("node").alias("id_a"),
@@ -801,7 +615,7 @@ class ClusterStore:
             # within-component pairs only: nothing changes — commit a
             # fence sentinel so the replay guard still advances
             self._commit_meta(s, batch_id, [])
-            return True
+            return
         # 4. rewrite ONLY the touched label buckets
         touched_labels = self._read_buckets(
             s, lab_paths, set(touched), ["node", "component"]
@@ -831,27 +645,13 @@ class ClusterStore:
         final = parts[0]
         for extra in parts[1:]:
             final = final.unionByName(extra)
-        touched_w, ic, written_c = self._write_generation(
-            s, final, batch_id, mapping, (idx_paths, bc, stats),
-            known_touched=touched,
+        # the remapped old ids' cindex partitions lose pairs; on an
+        # empty store there are none to drop (the local tier's rule)
+        ic = self._write_generation(
+            s, final, batch_id, mapping, idx_paths,
+            bc if lab_paths else set(), stats,
         )
-        stats["label_buckets_written"] = len(touched_w)
-        stats["index_partitions_written"] = len(ic)
-        gen, cgen = self._gen(batch_id), self._cgen(batch_id)
-        self._commit_meta(
-            s,
-            batch_id,
-            [("labels", b, f"{gen}/bucket={b}") for b in touched_w]
-            + [
-                (
-                    "cindex",
-                    b,
-                    f"{cgen}/cbucket={b}" if b in written_c else "",
-                )
-                for b in ic
-            ],
-        )
-        return True
+        self._commit_generation(s, batch_id, touched, ic, stats)
 
     def delete(
         self, nodes_df: DataFrame, batch_id: int, node_col: str = "node"
@@ -1077,21 +877,16 @@ class ClusterStore:
         return f"{self._cindex_root}/gen_{int(batch_id)}"
 
     def _write_generation(
-        self, s, final: DataFrame, batch_id, mapping, idx_ctx,
-        known_touched=None,
-    ):
+        self, s, final: DataFrame, batch_id, mapping, idx_paths, bc, stats
+    ) -> list[int]:
         """Write the label generation (partitioned by node bucket) and
         the matching cindex generation (partitioned by component
-        bucket); returns (label buckets written, cindex partitions
-        touched — including ones the fold emptied, cindex partitions
-        actually written).  ``known_touched``: the incremental fold
-        already knows the exact label-bucket set it writes (remap ∪ new
-        buckets — each provably non-empty: a remapped component's
-        members stay in their hash buckets with the new label, and new
-        nodes land in theirs), so passing it skips one read-back job;
-        the initial fold leaves it None and derives the set from a
-        Spark read-back of the generation (never a driver-local
-        listing — r10 ADVICE)."""
+        bucket); returns the cindex partitions written, including ones
+        the fold emptied.  ``bc``: the partitions of the remapped old
+        ids, whose pairs ``mapping`` drops.  The label buckets written
+        are the fold's touched set (remap ∪ new buckets — each provably
+        non-empty: a remapped component's members stay in their hash
+        buckets with the new label, and new nodes land in theirs)."""
         gen = self._gen(batch_id)
         # one writer task per bucket (r9): without the repartition the
         # upstream shuffle's 32 partitions each open files in up to
@@ -1112,12 +907,6 @@ class ClusterStore:
             .localCheckpoint(eager=True)
         )
         out.write.partitionBy("bucket").mode("overwrite").parquet(gen)
-        gen_df = out.select("node", "component", "bucket")
-        touched = (
-            sorted(int(b) for b in known_touched)
-            if known_touched is not None
-            else sorted(self._distinct_ints(gen_df, F.col("bucket")))
-        )
         # component index update: new (component, nbucket) pairs come
         # from the generation just written — it covers every member
         # bucket of every changed component, because remapped members
@@ -1128,7 +917,7 @@ class ClusterStore:
         # buckets' fresh pairs; partitions to rewrite are the old ids'
         # (rows dropped) plus the new pairs' components'.
         new_pairs = (
-            gen_df.select(
+            out.select(
                 "component", F.col("bucket").alias("nbucket")
             )
             .distinct()
@@ -1136,39 +925,37 @@ class ClusterStore:
         )
         ic = self._distinct_ints(new_pairs, F.col("cbucket"))
         idx_final = new_pairs.select("component", "nbucket", "cbucket")
-        if idx_ctx is not None:
-            idx_paths, bc, stats = idx_ctx
-            todo = set(ic) | set(bc)
-            ic = set(ic) | todo
-            while todo:
-                old_idx = self._read_buckets(
-                    s, idx_paths, todo, ["component", "nbucket"]
+        todo = ic | bc
+        ic |= todo
+        while todo:
+            old_idx = self._read_buckets(
+                s, idx_paths, todo, ["component", "nbucket"]
+            )
+            stats["index_partitions_read"] += sum(
+                1 for b in todo if idx_paths.get(b) is not None
+            )
+            if old_idx is None:
+                break
+            # drop emptied-bucket sentinel rows (the anti-join below
+            # would KEEP null components — null never equals __old__
+            # — and _bucket(NULL) would then misfile them as a real
+            # pair forever)
+            retained = (
+                old_idx.where(F.col("component").isNotNull())
+                .join(
+                    F.broadcast(mapping),
+                    F.col("component") == F.col("__old__"),
+                    "left_anti",
                 )
-                stats["index_partitions_read"] += sum(
-                    1 for b in todo if idx_paths.get(b) is not None
-                )
-                if old_idx is None:
-                    break
-                # drop emptied-bucket sentinel rows (the anti-join below
-                # would KEEP null components — null never equals __old__
-                # — and _bucket(NULL) would then misfile them as a real
-                # pair forever)
-                retained = (
-                    old_idx.where(F.col("component").isNotNull())
-                    .join(
-                        F.broadcast(mapping),
-                        F.col("component") == F.col("__old__"),
-                        "left_anti",
-                    )
-                    .select("component", "nbucket")
-                    .withColumn("cbucket", self._bucket(F.col("component")))
-                )
-                idx_final = idx_final.unionByName(retained).distinct()
-                # a pair filed outside its component's hash partition (a
-                # damaged index) is re-filed into that partition, which
-                # is then read and rewritten too
-                todo = self._distinct_ints(retained, F.col("cbucket")) - ic
-                ic |= todo
+                .select("component", "nbucket")
+                .withColumn("cbucket", self._bucket(F.col("component")))
+            )
+            idx_final = idx_final.unionByName(retained).distinct()
+            # a pair filed outside its component's hash partition (a
+            # damaged index) is re-filed into that partition, which
+            # is then read and rewritten too
+            todo = self._distinct_ints(retained, F.col("cbucket")) - ic
+            ic |= todo
         cgen = self._cgen(batch_id)
         # every partition in ic materializes by construction: a bucket
         # the fold EMPTIED (all its old ids remapped away, no new pairs)
@@ -1194,7 +981,20 @@ class ClusterStore:
         idx_final.repartition(
             self.n_buckets, F.col("cbucket")
         ).write.partitionBy("cbucket").mode("overwrite").parquet(cgen)
-        return touched, sorted(ic), set(ic)
+        return sorted(ic)
+
+    def _commit_generation(self, s, batch_id, touched, ic, stats) -> None:
+        """Record a fold's written label buckets and cindex partitions
+        in ``stats`` and commit their generation paths to meta."""
+        stats["label_buckets_written"] = len(touched)
+        stats["index_partitions_written"] = len(ic)
+        gen, cgen = self._gen(batch_id), self._cgen(batch_id)
+        self._commit_meta(
+            s,
+            batch_id,
+            [("labels", b, f"{gen}/bucket={b}") for b in touched]
+            + [("cindex", b, f"{cgen}/cbucket={b}") for b in ic],
+        )
 
     def _commit_meta(
         self, s: SparkSession, batch_id: int, bucket_rows: list

@@ -44,14 +44,6 @@ TOPK_SCHEMA = StructType(
 )
 
 
-def quantiles_schema(qs: Iterable[float]) -> StructType:
-    """(key, n, p…): what every streaming t-digest form emits."""
-    return StructType(
-        [StructField("key", StringType()), StructField("n", LongType())]
-        + [StructField(_qname(q), DoubleType()) for q in qs]
-    )
-
-
 def fold_tdigest(
     state: str | None,
     pdfs: Iterable[pd.DataFrame],
@@ -62,7 +54,7 @@ def fold_tdigest(
 ) -> tuple[str, pd.DataFrame]:
     """One key's micro-batch: fold ``pdfs`` into the state digest (a fresh
     one when ``state`` is None); returns the new state value and the
-    (key, n, p…) row.  Shared by both state APIs."""
+    (key, n, p…) row."""
     digest = (
         codec.loads(bytes.fromhex(state))
         if state is not None
@@ -88,8 +80,7 @@ def fold_spacesaving(
     capacity: int,
 ) -> tuple[str, pd.DataFrame]:
     """One key's micro-batch: fold ``pdfs`` into the state Space-Saving
-    summary; returns the new state value and the ``TOPK_SCHEMA`` rows.
-    Shared by both state APIs."""
+    summary; returns the new state value and the ``TOPK_SCHEMA`` rows."""
     sk = (
         codec.loads(bytes.fromhex(state))
         if state is not None
@@ -139,7 +130,10 @@ def tdigest_stream_quantiles(
     src = events.withWatermark("ts", watermark) if watermark else events
     return src.groupBy(key_col).applyInPandasWithState(
         _group_state_update(fold_tdigest, value_col, qs, compression),
-        outputStructType=quantiles_schema(qs),
+        outputStructType=StructType(
+            [StructField("key", StringType()), StructField("n", LongType())]
+            + [StructField(_qname(q), DoubleType()) for q in qs]
+        ),
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -157,84 +151,12 @@ def spacesaving_stream_topk(
     Space-Saving summary (state = O(capacity) counters,
     ``crick/space_saving_stubs.c.in:75-95``) in the state store; every
     micro-batch folds its rows in and emits the current top-k with error
-    bounds.
-
-    Uses ``applyInPandasWithState``; the Spark 4.x port is
-    ``spacesaving_stream_topk_tws`` below (ValueState instead of
-    GroupState), gated on the protobuf runtime probe ``tws_available``."""
+    bounds.  Uses ``applyInPandasWithState`` (GroupState), the state API
+    this engine runs and oracles its streaming sketches on."""
     return events.groupBy(key_col).applyInPandasWithState(
         _group_state_update(fold_spacesaving, item_col, k, capacity),
         outputStructType=TOPK_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4.x transformWithStateInPandas port
-# ---------------------------------------------------------------------------
-def tws_available() -> tuple[bool, str]:
-    """Runtime probe for the transformWithStateInPandas prerequisites.
-
-    The TWS Python worker speaks a protobuf protocol to the JVM state
-    server (pyspark.sql.streaming.proto imports google.protobuf), so the
-    API exists but cannot RUN without the protobuf package.  Returns
-    (ok, reason) so callers/tests can gate with an explicit message
-    instead of failing deep inside a stream worker."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return False, "google.protobuf not installed (TWS state protocol dependency)"
-    try:
-        from pyspark.sql.streaming import StatefulProcessor  # noqa: F401
-    except ImportError:
-        return False, "pyspark.sql.streaming.StatefulProcessor not available"
-    return True, ""
-
-
-def spacesaving_stream_topk_tws(
-    events: DataFrame,
-    key_col: str = "event_type",
-    item_col: str = "user_id",
-    k: int = 5,
-    capacity: int = 50,
-) -> DataFrame:
-    """``spacesaving_stream_topk`` on the Spark 4.x state API
-    (``transformWithStateInPandas`` + ValueState): same per-key bounded
-    Space-Saving summary, same output schema — only the state plumbing
-    differs.  Raises ImportError with the probe's reason when the runtime
-    lacks protobuf (see ``tws_available``); semantics-equivalence vs the
-    applyInPandasWithState path is asserted in tests when the dep exists
-    and recorded as an explicit skip when it doesn't."""
-    ok, reason = tws_available()
-    if not ok:
-        raise ImportError(f"transformWithStateInPandas unavailable: {reason}")
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class TopKProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("summary", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            blob, out = fold_spacesaving(
-                self._state.get()[0] if self._state.exists() else None,
-                rows,
-                key[0],
-                item_col,
-                k,
-                capacity,
-            )
-            self._state.update((blob,))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        TopKProcessor(),
-        outputStructType=TOPK_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -5,7 +5,9 @@ so the wire format is decided in one file; the two-phase path lives only
 in ``operators.sketch_agg`` and calls the kernels' ``.merge`` directly.
 Every bounded driver collect goes through ``crick_spark.driver_close``,
 and connected components has one union-find (``min_root_labels``) and
-one distributed algorithm.  These checks read the source (AST, so
+one distributed algorithm.  Streaming sketch state has one state API
+(``applyInPandasWithState``) and ``ClusterStore`` two fold tiers.  These
+checks read the source (AST, so
 docstrings and comments are fine) and fail if a decision starts
 spreading again."""
 
@@ -20,6 +22,13 @@ PKG = Path(__file__).resolve().parent.parent / "crick_spark"
 CODEC = PKG / "sketches" / "codec.py"
 RETIRED = {"SketchOps", "GROUP_KEY"}
 RETIRED_CC = {"dup_clusters", "connected_components_contract", "_close"}
+RETIRED_TIERS = {
+    "transformWithStateInPandas",
+    "tws_available",
+    "_fold_driver",
+    "_fold_initial",
+}
+RETIRED_MODULES = ("streaming/tws_state.py",)
 
 
 def _name(node) -> str | None:
@@ -135,6 +144,48 @@ def test_driver_close_guard_catches_offences(tmp_path):
         "b.py:1 uses dup_clusters",
         "b.py:4 uses _close",
         "2 union-find copies: ['a.py:1', 'b.py:2']",
+    ]
+
+
+def _retired_tier_offences(root: Path) -> list[str]:
+    """Exact-name uses of the deleted paths (``_fold_driver_local``, the
+    local fold tier, is not ``_fold_driver``) and the deleted modules."""
+    found = [f"module {m}" for m in RETIRED_MODULES if (root / m).exists()]
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        uses = sorted(
+            (node.lineno, _name(node))
+            for node in ast.walk(tree)
+            if _name(node) in RETIRED_TIERS
+        )
+        found += [f"{rel}:{line} uses {name}" for line, name in uses]
+    return found
+
+
+def test_one_streaming_state_api_and_two_cluster_store_tiers():
+    bad = _retired_tier_offences(PKG)
+    assert not bad, f"deleted state API ports or fold tiers are back: {bad}"
+
+
+def test_retired_tier_guard_catches_offences(tmp_path):
+    (tmp_path / "streaming").mkdir()
+    (tmp_path / "streaming" / "tws_state.py").write_text(
+        '"""transformWithStateInPandas in a docstring is fine"""\n'
+    )
+    (tmp_path / "a.py").write_text(
+        "from m import tws_available\n"
+        "df.groupBy(k).transformWithStateInPandas(p)\n"
+        "def _fold_initial(self):\n    pass\n"
+        "store._fold_driver(s)\n"
+        "store._fold_driver_local(s)\n"
+    )
+    assert _retired_tier_offences(tmp_path) == [
+        "module streaming/tws_state.py",
+        "a.py:1 uses tws_available",
+        "a.py:2 uses transformWithStateInPandas",
+        "a.py:3 uses _fold_initial",
+        "a.py:5 uses _fold_driver",
     ]
 
 

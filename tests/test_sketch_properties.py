@@ -189,10 +189,24 @@ def _arr(kind, items):
     return np.array(items, dtype=np.int64 if kind == "int64" else None)
 
 
+def _true_counts(*batches):
+    """Exact weighted counts with every NaN one item (Spark GROUP BY)."""
+    true: dict = {}
+    for items, counts in batches:
+        for i, it in enumerate(items):
+            key = "NaN" if it != it else it
+            true[key] = true.get(key, 0) + (1 if counts is None else int(counts[i]))
+    return lambda it: true.get("NaN" if it != it else it, 0)
+
+
 # NaN tied with 0.75 at the eviction minimum: with a float key that is
 # not a total order (nan < x and x < nan both false) heap and scan pick
 # different victims
 @example(("float", ([0.75, NAN, 0.75, 0.0, NAN], None), ([NAN], None)), 2)
+# NaN in both summaries of a merge, and re-added onto a summary holding
+# it: each NaN is a distinct float object, so a plain dict lookup misses
+@example(("float", ([NAN, NAN, 1.0], None), ([NAN, 2.0], None)), 20)
+@example(("float", ([NAN, 0.5], None), ([NAN, NAN, 0.5], None)), 3)
 @settings(max_examples=150, deadline=None)
 @given(_fold_case(), st.integers(1, 40))
 def test_spacesaving_heap_fold_matches_sequential_fold(case, capacity):
@@ -211,6 +225,19 @@ def test_spacesaving_heap_fold_matches_sequential_fold(case, capacity):
     got.add_batch(_arr(kind, items2), counts2)
     _reference_add_batch(want, _arr(kind, items2), counts2)
     assert codec.dumps(got) == codec.dumps(want)
+    # every NaN is one item: one counter within the bound after the
+    # re-add above, a merge, and a merge of decoded blobs
+    a = SpaceSaving.from_batch(_arr(kind, items), counts, capacity=capacity)
+    b = SpaceSaving.from_batch(_arr(kind, items2), counts2, capacity=capacity)
+    decoded = codec.loads(codec.dumps(a)).merge(codec.loads(codec.dumps(b)))
+    for sk, actual in (
+        (got, _true_counts((first, None), (items2, counts2))),
+        (a.merge(b), _true_counts((items, counts), (items2, counts2))),
+        (decoded, _true_counts((items, counts), (items2, counts2))),
+    ):
+        assert sum(1 for it in sk.counters if it != it) <= 1
+        for it, c, e in sk.topk(capacity):
+            assert c - e <= actual(it) <= c, (it, c, e, actual(it))
 
 
 def test_spacesaving_heap_fold_matches_sequential_fold_on_zipf_batch():

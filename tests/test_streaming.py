@@ -221,342 +221,6 @@ def test_spacesaving_stream_topk_exact_regime(spark):
         assert g["cnt"].min() >= excluded.max(), key
 
 
-def test_spacesaving_stream_topk_tws_port(spark):
-    """Spark 4.x transformWithStateInPandas port of the streaming top-k.
-
-    Runs the TWS path and asserts it matches the applyInPandasWithState
-    path exactly when the runtime has protobuf (the TWS state-protocol
-    dependency); in this container protobuf is absent and cannot be
-    installed, so the test records an explicit skip with the probe's
-    reason — the gate the round-2 review asked to make verifiable."""
-    import uuid
-
-    import pytest
-
-    from crick_spark.streaming.sketch_state import (
-        spacesaving_stream_topk,
-        spacesaving_stream_topk_tws,
-        tws_available,
-    )
-    from crick_spark.streaming.windows import stream_events
-
-    ok, reason = tws_available()
-    if not ok:
-        with pytest.raises(ImportError, match="transformWithStateInPandas unavailable"):
-            spacesaving_stream_topk_tws(stream_events(spark, SF_SMALL))
-        pytest.skip(f"TWS runtime dep missing: {reason}")
-
-    results = {}
-    for label, build in (
-        ("tws", spacesaving_stream_topk_tws),
-        ("apips", spacesaving_stream_topk),
-    ):
-        out = build(stream_events(spark, SF_SMALL), "event_type", "user_id", k=5, capacity=5000)
-        sink = f"t_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        results[label] = (
-            spark.table(sink).toPandas().sort_values(["key", "rank"], ignore_index=True)
-        )
-    assert results["tws"].equals(results["apips"])
-
-
-def test_tws_probe_consistency():
-    """CI-style loud-fail probe (r9 verdict item 10): if the runtime
-    HAS protobuf, ``tws_available`` must report available — otherwise a
-    rotted TWS path would hide behind the env skip forever.  When the
-    driver image gains protobuf, this test (plus the equivalence test
-    above, which then runs for real) auto-activates the path; it cannot
-    silently stay skipped."""
-    from crick_spark.streaming.sketch_state import tws_available
-
-    ok, reason = tws_available()
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_pb = True
-    except ImportError:
-        has_pb = False
-    if has_pb:
-        assert ok, (
-            f"protobuf present but TWS probe reports unavailable: {reason} "
-            "— the transformWithStateInPandas path has rotted"
-        )
-    else:
-        assert not ok and "protobuf" in reason
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-        self.ttl_ms = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    """Mock StatefulProcessorHandle: just enough surface for the r14
-    TWS processors (getValueState with ttlDurationMs, single-timer
-    register/delete/list) so their logic runs without the protobuf
-    state transport."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        st = self.states.setdefault(name, _FakeValueState())
-        st.ttl_ms = ttlDurationMs
-        return st
-
-    def registerTimer(self, ms):
-        self.timers.append(int(ms))
-
-    def deleteTimer(self, ms):
-        self.timers.remove(int(ms))
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-class _FakeExpiredTimer:
-    def __init__(self, ms):
-        self._ms = int(ms)
-
-    def getExpiryTimeInMs(self):
-        return self._ms
-
-
-def _sessions_pandas(ts_us, vals, gap_us):
-    """Gaps-and-islands reference: list of (start_us, n, round(sum,4))."""
-    order = sorted(range(len(ts_us)), key=lambda i: ts_us[i])
-    out, start, last, n, sv = [], None, None, 0, 0.0
-    for i in order:
-        t, v = ts_us[i], vals[i]
-        if last is not None and t - last > gap_us:
-            out.append((start, n, round(sv, 4)))
-            start, n, sv = t, 0, 0.0
-        if start is None:
-            start = t
-        last = t
-        n += 1
-        sv += v
-    if n:
-        out.append((start, n, round(sv, 4)))
-    return out
-
-
-def test_tws_session_processor_semantics_mock_handle():
-    """r14 (VERDICT r13 #6): the transformWithStateInPandas session
-    processor's LOGIC — fold, in-batch closes, cross-batch session
-    continuation, timer re-registration (exactly one live timer per
-    key), stale-timer guard, and timer-expiry emission — verified by
-    driving handleInputRows/handleExpiredTimer directly against a mock
-    handle, and the emitted sessions checked against an independent
-    gaps-and-islands recomputation.  Only Spark's protobuf state
-    transport is left to the env-gated e2e test."""
-    import pandas as pd
-
-    from crick_spark.streaming.tws_state import SessionRollupProcessor
-
-    GAP_MS = 600_000  # 10 minutes
-    proc = SessionRollupProcessor(GAP_MS, ttl_ms=3_600_000)
-    handle = _FakeHandle()
-    proc.init(handle)
-    assert handle.states["session"].ttl_ms == 3_600_000
-    M = 60_000_000  # one minute in us
-    base = 1_700_000_000_000_000  # any us epoch
-
-    def pdf(pairs):
-        return pd.DataFrame(
-            {
-                "ts": pd.to_datetime([base + m * M for m, _ in pairs], unit="us"),
-                "value": [v for _, v in pairs],
-            }
-        )
-
-    key = (7,)
-    # batch 1: minutes 0,5 (one open session), UNSORTED + split pdfs
-    out1 = list(
-        proc.handleInputRows(key, [pdf([(5, 2.0)]), pdf([(0, 1.0)])], None)
-    )
-    assert out1 == []  # nothing closed yet
-    assert len(handle.timers) == 1
-    assert handle.timers[0] == (base + 5 * M) // 1000 + GAP_MS
-    # batch 2: minute 20 closes session 1 in-batch, opens session 2
-    out2 = list(proc.handleInputRows(key, [pdf([(20, 4.0)])], None))
-    assert len(out2) == 1 and len(out2[0]) == 1
-    r = out2[0].iloc[0]
-    assert (
-        r["user_id"] == 7
-        and r["n_events"] == 2
-        and r["sum_value"] == 3.0
-        and r["session_start"] == pd.Timestamp(base, unit="us")
-    )
-    # single-timer discipline: the old timer was deleted, new one live
-    assert handle.timers == [(base + 20 * M) // 1000 + GAP_MS]
-    # a stale timer (from before the fold) must NOT close the session
-    stale = _FakeExpiredTimer((base + 5 * M) // 1000 + GAP_MS)
-    assert list(proc.handleExpiredTimer(key, None, stale)) == []
-    assert handle.states["session"].exists()
-    # the real expiry emits the open session and clears state
-    fire = _FakeExpiredTimer(handle.timers[0])
-    out3 = list(proc.handleExpiredTimer(key, None, fire))
-    assert len(out3) == 1
-    r = out3[0].iloc[0]
-    assert r["n_events"] == 1 and r["sum_value"] == 4.0
-    assert not handle.states["session"].exists()
-    # full-trace equivalence vs the gaps-and-islands reference on a
-    # randomized multi-batch schedule
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    minutes = np.cumsum(rng.integers(1, 25, 40))
-    vals = rng.uniform(0, 10, 40).round(2)
-    proc2 = SessionRollupProcessor(GAP_MS)
-    h2 = _FakeHandle()
-    proc2.init(h2)
-    emitted = []
-    for lo in range(0, 40, 7):
-        rows = list(zip(minutes[lo : lo + 7].tolist(), vals[lo : lo + 7]))
-        for df in proc2.handleInputRows(key, [pdf(rows)], None):
-            emitted.extend(
-                (
-                    int(r["session_start"].value),  # ns
-                    int(r["n_events"]),
-                    float(r["sum_value"]),
-                )
-                for _, r in df.iterrows()
-            )
-    for df in proc2.handleExpiredTimer(
-        key, None, _FakeExpiredTimer(h2.timers[0])
-    ):
-        emitted.extend(
-            (
-                int(r["session_start"].value),
-                int(r["n_events"]),
-                float(r["sum_value"]),
-            )
-            for _, r in df.iterrows()
-        )
-    ts_us = [base + int(m) * M for m in minutes]
-    want = [
-        (int(s * 1000), n, sv)
-        for (s, n, sv) in _sessions_pandas(ts_us, vals.tolist(), GAP_MS * 1000)
-    ]
-    assert emitted == want
-
-
-def test_tws_tdigest_processor_semantics_mock_handle():
-    """r14 (VERDICT r13 #6): the TTL'd t-digest TWS processor folds
-    micro-batches into ONE digest per key whose size and quantiles match
-    a direct single-shot digest over the concatenated stream, and the
-    ttlDurationMs reaches the value state."""
-    import numpy as np
-    import pandas as pd
-
-    from crick_spark.sketches import TDigest
-    from crick_spark.streaming.tws_state import TDigestQuantilesProcessor
-
-    rng = np.random.default_rng(11)
-    batches = [rng.exponential(50.0, n) for n in (400, 300, 500)]
-    proc = TDigestQuantilesProcessor(ttl_ms=60_000)
-    handle = _FakeHandle()
-    proc.init(handle)
-    assert handle.states["digest"].ttl_ms == 60_000
-    last = None
-    for b in batches:
-        (last,) = list(
-            proc.handleInputRows(
-                ("click",), [pd.DataFrame({"value": b})], None
-            )
-        )
-    row = last.iloc[0]
-    allv = np.concatenate(batches)
-    assert row["key"] == "click" and row["n"] == len(allv)
-    direct = TDigest.from_values(allv)
-    for q in (0.5, 0.9, 0.99):
-        col = f"p{str(q).replace('.', '_')}"
-        # same accuracy bar as the streaming accuracy gate: both the
-        # folded and direct estimates sit within rank 0.02 of q
-        est = row[col]
-        assert abs((allv <= est).mean() - q) <= 0.02, (q, est)
-        assert abs(row[col] - direct.quantile(q)) <= np.quantile(
-            allv, min(q + 0.02, 1.0)
-        ) - np.quantile(allv, max(q - 0.02, 0.0)) + 1e-9
-
-
-def test_tws_session_rollup_e2e_or_env_skip(spark):
-    """The stream form: runs session_rollup_tws end-to-end and matches
-    session_rollup_batch when the protobuf runtime exists; otherwise
-    asserts the loud ImportError and records the documented env skip
-    (the same contract as the top-k TWS port above)."""
-    import pytest
-
-    from crick_spark.streaming.sketch_state import tws_available
-    from crick_spark.streaming.tws_state import session_rollup_tws
-    from crick_spark.streaming.windows import stream_events
-
-    ok, reason = tws_available()
-    if not ok:
-        with pytest.raises(
-            ImportError, match="transformWithStateInPandas unavailable"
-        ):
-            session_rollup_tws(stream_events(spark, SF_SMALL))
-        pytest.skip(f"TWS runtime dep missing: {reason}")
-
-    import uuid
-
-    from crick_spark.streaming.windows import session_rollup_batch
-
-    out = session_rollup_tws(stream_events(spark, SF_SMALL), "10 minutes")
-    sink = f"tws_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = (
-        spark.table(sink)
-        .toPandas()
-        .sort_values(["user_id", "session_start"], ignore_index=True)
-    )
-    ev = load_table(spark, SF_SMALL, "events")
-    want = (
-        session_rollup_batch(ev, "10 minutes")
-        .toPandas()
-        .sort_values(["user_id", "session_start"], ignore_index=True)
-    )
-    # timers only fire once the watermark passes; sessions beyond the
-    # final watermark stay open, so the streamed rows must be a prefix
-    # subset of batch per user — and every emitted row exact
-    merged = got.merge(
-        want, on=["user_id", "session_start"], suffixes=("_s", "_b")
-    )
-    assert len(merged) == len(got)
-    assert (merged["n_events_s"] == merged["n_events_b"]).all()
-    assert (merged["sum_value_s"] == merged["sum_value_b"]).all()
-
-
 def test_incremental_dedup_equals_batch_lsh(spark, tmp_path):
     """The streaming incremental candidate set (4 micro-batches folding
     into a persisted bucket store) must equal the single-batch
@@ -1531,98 +1195,79 @@ def test_pyhash_matches_spark(spark):
         spark_xxhash64(1.5)
 
 
-def test_cluster_store_driver_fold_matches_distributed_fold(
-    spark, tmp_path
-):
-    """r14: the fold's driver fast path (batch collected once, bucket
-    sets / union-find / mapping computed in Python) must produce the
-    SAME labeling, the same touched-bucket meta rows, and the same
-    O(touched) stats as the distributed path it replaces.  Forcing the
-    distributed path via a zero driver-close cap on a twin store and
-    comparing everything pins the equivalence."""
+_FOLD_BATCHES = [
+    [(i, i + 10_000) for i in range(0, 20, 2)],  # 10 tiny components
+    [(0, 2), (123456, 0)],  # merge two + attach a new node
+    [(4, 4), (None, 9)],  # degenerate rows only -> fence
+    [(6, 8), (555_001, 555_002)],  # merge + disjoint new pair
+]
+
+
+def _resolved_meta(spark, st):
+    """(bucket set, emptied-bucket set) of a store's labels and cindex meta."""
+    _, lab, idx = st.read_meta(spark)
+    return [(set(m), {b for b, p in m.items() if p is None}) for m in (lab, idx)]
+
+
+def test_cluster_store_driver_fold_matches_distributed_fold(spark, tmp_path):
+    """ClusterStore's driver fold (batch collected once, every bucket
+    read/write a pyarrow call on the driver — zero Spark jobs) and its
+    distributed fold (forced by a zero driver-close cap, from the first
+    fold on an empty store) give the same stats for every batch, the
+    same labeling and the same resolved meta, emptied partitions
+    included."""
     from crick_spark.streaming.cluster_store import ClusterStore
 
-    batches = [
-        [(i, i + 10_000) for i in range(0, 20, 2)],  # 10 tiny components
-        [(0, 2), (123456, 0)],  # merge two + attach a new node
-        [(4, 4), (None, 9)],  # degenerate rows only -> fence
-        [(6, 8), (555_001, 555_002)],  # merge + disjoint new pair
-    ]
-    fast = ClusterStore(str(tmp_path / "fast"), n_buckets=8)
-    slow = ClusterStore(str(tmp_path / "slow"), n_buckets=8)
-    slow.DRIVER_CLOSE_MAX_EDGES = 0  # force the distributed path
-    for bid, batch in enumerate(batches):
-        df = spark.createDataFrame(batch, "id_a long, id_b long")
-        assert fast.fold(df, bid) is True
-        df2 = spark.createDataFrame(batch, "id_a long, id_b long")
-        assert slow.fold(df2, bid) is True
-        assert fast.last_fold_stats == slow.last_fold_stats, (
+    local = ClusterStore(str(tmp_path / "local"), n_buckets=8)
+    spk = ClusterStore(str(tmp_path / "spark"), n_buckets=8)
+    spk.DRIVER_CLOSE_MAX_EDGES = 0  # force the Spark tier
+    for bid, batch in enumerate(_FOLD_BATCHES):
+        for st in (local, spk):
+            df = spark.createDataFrame(batch, "id_a long, id_b long")
+            assert st.fold(df, bid) is True
+        assert local.last_fold_stats == spk.last_fold_stats, (
             bid,
-            fast.last_fold_stats,
-            slow.last_fold_stats,
+            local.last_fold_stats,
+            spk.last_fold_stats,
         )
-    got_fast = sorted(map(tuple, fast.labels(spark).collect()))
-    got_slow = sorted(map(tuple, slow.labels(spark).collect()))
-    assert got_fast == got_slow
-    # meta bucket rows resolve identically (same touched sets per batch)
-    _, lab_f, idx_f = fast.read_meta(spark)
-    _, lab_s, idx_s = slow.read_meta(spark)
-    assert set(lab_f) == set(lab_s)
-    assert {b for b, p in lab_f.items() if p is None} == {
-        b for b, p in lab_s.items() if p is None
-    }
-    assert set(idx_f) == set(idx_s)
+    assert sorted(map(tuple, spk.labels(spark).collect())) == sorted(
+        map(tuple, local.labels(spark).collect())
+    )
+    assert _resolved_meta(spark, spk) == _resolved_meta(spark, local)
 
 
 def test_cluster_store_local_data_fold_matches_spark_paths(
     spark, tmp_path
 ):
-    """r15: the fold's pyarrow data path (every bucket read/write a
-    driver call — zero Spark jobs) must produce the same labeling, the
-    same resolved meta, and the same O(touched) stats as BOTH Spark
-    tiers: the r14 driver-bookkeeping fold (forced via a zero data-byte
-    cap) and the fully distributed fold (zero driver-close cap).  Also
-    pins that Spark can read the pyarrow-written generations (the
-    labels() view IS a Spark read) and that a mixed store — local fold
-    on top of Spark-written generations and vice versa — resolves
-    identically."""
+    """The two fold tiers interoperate on one store: a store that
+    alternates tiers (the Spark tier forced by a zero data-byte cap on
+    odd batches), so each tier folds on top of the other's generations,
+    matches a pyarrow-tier store in stats, labeling and resolved meta.
+    Spark reads the pyarrow-written generations (the labels() view IS a
+    Spark read); a reopen resolves from disk alone; string node ids
+    agree across tiers too."""
     from crick_spark.streaming.cluster_store import ClusterStore
 
-    batches = [
-        [(i, i + 10_000) for i in range(0, 20, 2)],
-        [(0, 2), (123456, 0)],
-        [(4, 4), (None, 9)],  # fence
-        [(6, 8), (555_001, 555_002)],
-    ]
     local = ClusterStore(str(tmp_path / "local"), n_buckets=8)
-    sdrv = ClusterStore(str(tmp_path / "sdrv"), n_buckets=8)
-    sdrv.DRIVER_DATA_MAX_BYTES = 0  # force the r14 Spark data path
-    dist = ClusterStore(str(tmp_path / "dist"), n_buckets=8)
-    dist.DRIVER_CLOSE_MAX_EDGES = 0  # force the distributed path
     mixed = ClusterStore(str(tmp_path / "mixed"), n_buckets=8)
-    for bid, batch in enumerate(batches):
-        for st in (local, sdrv, dist, mixed):
-            if st is mixed:
-                # alternate tiers on ONE store: generations must interop
-                st.DRIVER_DATA_MAX_BYTES = (
-                    0 if bid % 2 else ClusterStore.DRIVER_DATA_MAX_BYTES
-                )
+    for bid, batch in enumerate(_FOLD_BATCHES):
+        mixed.DRIVER_DATA_MAX_BYTES = (
+            0 if bid % 2 else ClusterStore.DRIVER_DATA_MAX_BYTES
+        )
+        for st in (local, mixed):
             df = spark.createDataFrame(batch, "id_a long, id_b long")
             assert st.fold(df, bid) is True
-        assert local.last_fold_stats == sdrv.last_fold_stats, bid
-        assert local.last_fold_stats == dist.last_fold_stats, bid
-        assert local.last_fold_stats == mixed.last_fold_stats, bid
-    want = sorted(map(tuple, dist.labels(spark).collect()))
-    assert sorted(map(tuple, local.labels(spark).collect())) == want
-    assert sorted(map(tuple, sdrv.labels(spark).collect())) == want
-    assert sorted(map(tuple, mixed.labels(spark).collect())) == want
-    _, lab_l, idx_l = local.read_meta(spark)
-    _, lab_s, idx_s = sdrv.read_meta(spark)
-    assert set(lab_l) == set(lab_s) and set(idx_l) == set(idx_s)
-    # a REOPEN of the pyarrow-written store resolves from disk alone
+        assert local.last_fold_stats == mixed.last_fold_stats, (
+            bid,
+            local.last_fold_stats,
+            mixed.last_fold_stats,
+        )
+
     reopened = ClusterStore(str(tmp_path / "local"), n_buckets=8)
-    assert sorted(map(tuple, reopened.labels(spark).collect())) == want
-    # string node ids take the local path too
+    want = sorted(map(tuple, local.labels(spark).collect()))
+    for st in (mixed, reopened):
+        assert sorted(map(tuple, st.labels(spark).collect())) == want
+        assert _resolved_meta(spark, st) == _resolved_meta(spark, local)
     sa = ClusterStore(str(tmp_path / "sa"), n_buckets=4)
     sb = ClusterStore(str(tmp_path / "sb"), n_buckets=4)
     sb.DRIVER_CLOSE_MAX_EDGES = 0
@@ -1696,7 +1341,7 @@ def _cindex_pairs(spark, store):
 def test_cluster_store_refiles_misfiled_cindex_pair(spark, tmp_path):
     """A component-index partition holding a pair whose component hashes
     to ANOTHER partition (a damaged index) must not break a fold: both
-    data tiers — the pyarrow tier and the Spark tier (zero data-byte
+    fold tiers — the pyarrow tier and the Spark tier (zero data-byte
     cap) — re-file the pair into its hash partition, read and rewrite
     that partition too, and end with identical labels, cindex and stats;
     the resolved cindex is then exactly the one the labels imply."""

@@ -4,7 +4,9 @@ Runs every ``queries()`` entry on Spark and (when present) the matching
 ``oracle_sql()`` on DuckDB at the same sf dir, then compares:
 row count, column-name set, and values (columns sorted by name, rows
 sorted by all columns) — exact where possible, tiny float tolerance
-reported separately so rounding-grid risks are visible.
+reported separately so rounding-grid risks are visible.  Each result
+line gives the Spark time (query plus ``toPandas``) and the DuckDB
+oracle time separately.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -101,28 +103,34 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
-            print(f"FAIL  {name}: spark error: {ex}")
+            print(f"FAIL  {name} (spark {time.time()-t0:.1f}s): spark error: {ex}")
             n_fail += 1
             continue
+        spark_s = time.time() - t0
         if name not in oracles:
-            print(f"ok    {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            print(f"ok    {name}: rows-only ({len(sdf)} rows, spark {spark_s:.1f}s)")
             if len(sdf) == 0:
                 print(f"      WARNING: 0 rows")
             continue
+        t0 = time.time()
         try:
             odf = con.sql(oracles[name]).df()
         except Exception as ex:
-            print(f"FAIL  {name}: duckdb error: {ex}")
+            print(
+                f"FAIL  {name} (spark {spark_s:.1f}s, oracle {time.time()-t0:.1f}s): "
+                f"duckdb error: {ex}"
+            )
             n_fail += 1
             continue
+        times = f"spark {spark_s:.1f}s, oracle {time.time()-t0:.1f}s"
         problems = compare(name, sdf, odf)
         if problems:
             n_fail += 1
-            print(f"FAIL  {name} ({time.time()-t0:.1f}s)")
+            print(f"FAIL  {name} ({times})")
             for p in problems[:9]:
                 print(f"      {p}")
         else:
-            print(f"PASS  {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS  {name} ({len(sdf)} rows, {times})")
     print(f"\n{n_fail} failures / {len(only) if only else len(qs)} checked")
     return 1 if n_fail else 0
 
