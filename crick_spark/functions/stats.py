@@ -43,30 +43,30 @@ def kurt_unbiased(n: Column, g2: Column) -> Column:
     k = g2 + 3.0
     return ((n * n - 1) * k - 9 * n + 15) / ((n - 2) * (n - 3)) - 3.0
 
-def summary_stats_exprs(col: Column, round_to: int | None = None) -> list[Column]:
-    """The full SummaryStats result as aliased aggregate expressions.
+def summary_stats_exprs(col: Column) -> list[Column]:
+    """The full SummaryStats result as aliased aggregate expressions — the
+    package's one SummaryStats implementation (``operators.moments_agg``
+    and every moments query aggregate through it).
 
     One hash-aggregate pass computes everything (crick computes all moments
-    in one ``update`` pass too, ``crick/stats_stubs.c:139-226``).
+    in one ``update`` pass too, ``crick/stats_stubs.c:139-226``).  NaN is
+    skipped like NULL; a group with no non-NaN value gets ``cnt`` = 0 and
+    NULL elsewhere, and var/std/skew/kurt are NULL where they are
+    undefined (too few values, or a constant group for skew/kurt).
     """
     c = nan_to_null(col)
-
-    def r(x: Column) -> Column:
-        return F.round(x, round_to) if round_to is not None else x
-
-    n = F.count(c)
     return [
-        n.alias("cnt"),
-        r(F.sum(c)).alias("sum_x"),
-        r(F.min(c)).alias("min_x"),
-        r(F.max(c)).alias("max_x"),
-        r(F.avg(c)).alias("mean_x"),
-        r(F.var_pop(c)).alias("var_pop_x"),
-        r(F.var_samp(c)).alias("var_samp_x"),
-        r(F.stddev_pop(c)).alias("std_pop_x"),
-        r(F.stddev_samp(c)).alias("std_samp_x"),
-        r(F.skewness(c)).alias("skew_x"),
-        r(F.kurtosis(c)).alias("kurt_x"),
+        F.count(c).alias("cnt"),
+        F.sum(c).alias("sum_x"),
+        F.min(c).alias("min_x"),
+        F.max(c).alias("max_x"),
+        F.avg(c).alias("mean_x"),
+        F.var_pop(c).alias("var_pop_x"),
+        F.var_samp(c).alias("var_samp_x"),
+        F.stddev_pop(c).alias("std_pop_x"),
+        F.stddev_samp(c).alias("std_samp_x"),
+        F.skewness(c).alias("skew_x"),
+        F.kurtosis(c).alias("kurt_x"),
     ]
 
 

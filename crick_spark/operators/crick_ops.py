@@ -1,10 +1,13 @@
 """The crick operator surface as DataFrame-level aggregations.
 
 Each function is the Spark-native form of a reference operator (SURVEY §2):
-``tdigest_*`` ↔ ``crick.TDigest``, ``spacesaving_topk`` ↔
-``crick.SpaceSaving.topk``, ``moments_agg`` ↔ ``crick.SummaryStats`` — all
-running through the two-phase sketch aggregation in ``sketch_agg`` (bounded
-state, buffer-only shuffle; SURVEY §3.3/§3.4).
+``tdigest_*`` ↔ ``crick.TDigest`` and ``spacesaving_topk`` ↔
+``crick.SpaceSaving.topk`` run through the two-phase sketch aggregation in
+``sketch_agg`` (bounded state, buffer-only shuffle; SURVEY §3.3/§3.4).
+``moments_agg`` ↔ ``crick.SummaryStats`` is algebraic, so it needs no
+sketch bytes: it is one JVM aggregate over
+``functions.stats.summary_stats_exprs``, whose partial/final central-moment
+buffers are the same mergeable one-pass algorithm.
 
 ``tdigest_agg`` returns the *sketch itself* as a column (crick's pickle
 surface, ``tdigest.pyx:246-263``): persistable to parquet, mergeable later
@@ -27,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from crick_spark.functions.stats import summary_stats_exprs
 from crick_spark.operators.sketch_agg import (
     BLOB_SCHEMA,
     merge_sketches,
@@ -34,7 +38,7 @@ from crick_spark.operators.sketch_agg import (
     sketch_aggregate,
     to_blob,
 )
-from crick_spark.sketches import Moments, SpaceSaving, TDigest, codec
+from crick_spark.sketches import SpaceSaving, TDigest, codec
 
 
 def _qname(q: float) -> str:
@@ -75,14 +79,8 @@ def tdigest_agg(
     )
 
 
-def tdigest_merge_finalize(
-    partials: DataFrame,
-    by: list[str] | None,
-    finalize: Callable[[TDigest], pd.DataFrame],
-    result_schema: StructType,
-) -> DataFrame:
-    """Merge a (possibly persisted) digest-column DataFrame and finalize."""
-    return merge_sketches(partials, by or [], finalize, result_schema)
+# The name perfbench's layer probe imports; package code calls merge_sketches.
+tdigest_merge_finalize = merge_sketches
 
 
 def tdigest_quantiles(
@@ -373,34 +371,20 @@ def spacesaving_decayed_topk(
 # ---------------------------------------------------------------------------
 # Moments (SummaryStats)
 # ---------------------------------------------------------------------------
-_MOMENTS_FIELDS = [
-    ("cnt", LongType()),
-    ("sum_x", DoubleType()),
-    ("min_x", DoubleType()),
-    ("max_x", DoubleType()),
-    ("mean_x", DoubleType()),
-    ("var_pop_x", DoubleType()),
-    ("var_samp_x", DoubleType()),
-    ("std_pop_x", DoubleType()),
-    ("std_samp_x", DoubleType()),
-    ("skew_x", DoubleType()),
-    ("kurt_x", DoubleType()),
-]
-
-
 def moments_agg(df: DataFrame, col: str, by: list[str] | None = None) -> DataFrame:
-    """Full SummaryStats struct in one pass through the sketch path (crick
-    ``SummaryStats``); the built-in fast path for the same result is
-    ``crick_spark.functions.stats.summary_stats_exprs``."""
-    schema = StructType([StructField(n, t) for n, t in _MOMENTS_FIELDS])
+    """Full SummaryStats struct (crick ``SummaryStats``): (by…, cnt, sum_x,
+    min_x, max_x, mean_x, var_pop_x, var_samp_x, std_pop_x, std_samp_x,
+    skew_x, kurt_x), every statistic a double.
 
-    def build(pdf: pd.DataFrame) -> Moments:
-        return Moments.from_values(pdf[col].to_numpy(np.float64))
-
-    def finalize(sk: Moments) -> pd.DataFrame:
-        return pd.DataFrame([sk.finalize()])
-
-    return sketch_aggregate(df, build, [col], by, finalize, schema)
+    One JVM hash aggregate over ``summary_stats_exprs`` — Catalyst's
+    partial/final central-moment buffers are crick's Pébay update/merge, so
+    no Python crosses the plan.  NaN is skipped like NULL; where a
+    statistic is undefined (empty group, n < 2 for var_samp/std_samp, a
+    constant group for skew/kurt) it is NULL, and a group holding ±inf
+    gets NaN for var/std/skew/kurt.  With no ``by`` the result is one row,
+    ``cnt`` = 0 on empty input."""
+    g = df.groupBy(*by) if by else df
+    return g.agg(*summary_stats_exprs(F.col(col).cast("double")))
 
 
 # ---------------------------------------------------------------------------
@@ -726,7 +710,7 @@ def tdigest_rollup_levels(
             else F.date_trunc(level, F.col("__day__")).cast("date")
         )
         leveled = partials.withColumn("period", period).drop("__day__")
-        res = tdigest_merge_finalize(leveled, ["period"], finalize, schema)
+        res = merge_sketches(leveled, ["period"], finalize, schema)
         res = res.select(F.lit(level).alias("level"), "period", "n", *[_qname(q) for q in qs])
         out = res if out is None else out.unionByName(res)
     return out

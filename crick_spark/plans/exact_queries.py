@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from crick_spark.functions.quantiles import cdf_exprs, histogram
 from crick_spark.functions.stats import nan_to_null
 from crick_spark.functions.topk import exact_topk, exact_topk_per_group
-from crick_spark.plans.registry import register
+from crick_spark.operators import moments_agg
+from crick_spark.plans.registry import register, rounded
 from crick_spark.sources.tables import load_table
 from crick_spark.tmpdirs import run_tmpdir
 
@@ -89,19 +90,13 @@ GROUP BY mu
 )
 def summary_stats_extendedprice(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
-    x = nan_to_null(F.col("l_extendedprice"))
-    return li.agg(
-        F.count(x).alias("cnt"),
-        F.round(F.sum(x), 1).alias("sum_x"),
-        F.round(F.min(x), 6).alias("min_x"),
-        F.round(F.max(x), 6).alias("max_x"),
-        F.round(F.avg(x), 5).alias("mean_x"),
-        F.round(F.var_pop(x), 1).alias("var_pop_x"),
-        F.round(F.var_samp(x), 1).alias("var_samp_x"),
-        F.round(F.stddev_pop(x), 4).alias("std_pop_x"),
-        F.round(F.stddev_samp(x), 4).alias("std_samp_x"),
-        F.round(F.skewness(x), 6).alias("skew_x"),
-        F.round(F.kurtosis(x), 6).alias("kurt_x"),
+    return moments_agg(li, "l_extendedprice").select(
+        "cnt",
+        *rounded(
+            {"sum_x": 1, "min_x": 6, "max_x": 6, "mean_x": 5, "var_pop_x": 1,
+             "var_samp_x": 1, "std_pop_x": 4, "std_samp_x": 4, "skew_x": 6,
+             "kurt_x": 6}
+        ),
     )
 
 
@@ -130,15 +125,14 @@ GROUP BY s.g, m.mu
 )
 def summary_stats_by_returnflag(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
-    x = nan_to_null(F.col("l_quantity"))
-    return li.groupBy("l_returnflag").agg(
-        F.count(x).alias("cnt"),
-        F.round(F.sum(x), 2).alias("sum_x"),
-        F.round(F.avg(x), 6).alias("mean_x"),
-        F.round(F.var_pop(x), 6).alias("var_pop_x"),
-        F.round(F.stddev_samp(x), 6).alias("std_samp_x"),
-        F.round(F.skewness(x), 6).alias("skew_x"),
-        F.round(F.kurtosis(x), 6).alias("kurt_x"),
+    out = moments_agg(li, "l_quantity", by=["l_returnflag"])
+    return out.select(
+        "l_returnflag",
+        "cnt",
+        *rounded(
+            {"sum_x": 2, "mean_x": 6, "var_pop_x": 6, "std_samp_x": 6,
+             "skew_x": 6, "kurt_x": 6}
+        ),
     )
 
 
@@ -1002,21 +996,13 @@ def moments_bias_corrected(spark, sf_dir):
     from crick_spark.functions.stats import kurt_unbiased, skew_unbiased
 
     li = load_table(spark, sf_dir, "lineitem")
-    x = nan_to_null(F.col("l_quantity"))
-    agg = li.groupBy("l_returnflag").agg(
-        F.count(x).alias("cnt"),
-        F.skewness(x).alias("g1"),
-        F.kurtosis(x).alias("g2"),
-    )
+    agg = moments_agg(li, "l_quantity", by=["l_returnflag"])
+    n = F.col("cnt")
     return agg.select(
         "l_returnflag",
         "cnt",
-        F.round(skew_unbiased(F.col("cnt"), F.col("g1")), 6).alias(
-            "skew_corrected"
-        ),
-        F.round(kurt_unbiased(F.col("cnt"), F.col("g2")), 6).alias(
-            "kurt_corrected"
-        ),
+        F.round(skew_unbiased(n, F.col("skew_x")), 6).alias("skew_corrected"),
+        F.round(kurt_unbiased(n, F.col("kurt_x")), 6).alias("kurt_corrected"),
     )
 
 

@@ -19,7 +19,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -38,6 +39,11 @@ def register(name: str, oracle: Optional[str] = None, doc: str = ""):
         return fn
 
     return deco
+
+
+def rounded(digits: dict[str, int]) -> list[Column]:
+    """Each named column rounded in-query to its oracle's grid."""
+    return [F.round(c, d).alias(c) for c, d in digits.items()]
 
 
 def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

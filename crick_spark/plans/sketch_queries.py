@@ -26,11 +26,16 @@ from crick_spark.operators import (
     tdigest_quantiles,
 )
 from crick_spark.functions.quantiles import empirical_cdf_at
-from crick_spark.plans.registry import register
+from crick_spark.plans.registry import register, rounded
 from crick_spark.sources.tables import load_table
 from crick_spark.tmpdirs import run_tmpdir
 
 _QS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+# The l_extendedprice moments oracles' rounding grid (per moments_agg column)
+_PRICE_DIGITS = {
+    "sum_x": 1, "min_x": 6, "max_x": 6, "mean_x": 5, "var_pop_x": 1,
+    "var_samp_x": 1, "std_pop_x": 4, "std_samp_x": 4, "skew_x": 5, "kurt_x": 5,
+}
 
 
 @register(
@@ -202,26 +207,14 @@ SELECT count(*) AS cnt,
 FROM s, m
 GROUP BY mu
 """,
-    doc="SummaryStats through the two-phase sketch path — exact algorithm "
-    "(Pébay merge), so it hash-matches the oracle after rounding; proves "
-    "the partial→merge pipeline end-to-end.",
+    doc="SummaryStats through moments_agg — one JVM aggregate whose "
+    "partial/final central-moment buffers are crick's Pébay update/merge; "
+    "an exact algorithm, so it hash-matches the two-pass oracle after "
+    "rounding.",
 )
 def moments_sketch_extendedprice(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
-    out = moments_agg(li, "l_extendedprice")
-    return out.select(
-        "cnt",
-        F.round("sum_x", 1).alias("sum_x"),
-        F.round("min_x", 6).alias("min_x"),
-        F.round("max_x", 6).alias("max_x"),
-        F.round("mean_x", 5).alias("mean_x"),
-        F.round("var_pop_x", 1).alias("var_pop_x"),
-        F.round("var_samp_x", 1).alias("var_samp_x"),
-        F.round("std_pop_x", 4).alias("std_pop_x"),
-        F.round("std_samp_x", 4).alias("std_samp_x"),
-        F.round("skew_x", 5).alias("skew_x"),
-        F.round("kurt_x", 5).alias("kurt_x"),
-    )
+    return moments_agg(li, "l_extendedprice").select("cnt", *rounded(_PRICE_DIGITS))
 
 
 # r14 (VERDICT r13 #8): approx_quantiles_accuracy retired — its
@@ -338,7 +331,7 @@ def tdigest_persist_roundtrip(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from crick_spark.operators.crick_ops import tdigest_agg, tdigest_merge_finalize
+    from crick_spark.operators import merge_sketches, tdigest_agg
 
     li = load_table(spark, sf_dir, "lineitem")
     partials = tdigest_agg(li, "l_extendedprice", by=["l_returnflag"])
@@ -354,8 +347,8 @@ def tdigest_persist_roundtrip(spark, sf_dir):
             [{f"p{str(q).replace('.', '_')}": float(sk.quantile(q)) for q in qs}]
         )
 
-    via_disk = tdigest_merge_finalize(restored, ["l_returnflag"], finalize, schema)
-    direct = tdigest_merge_finalize(partials, ["l_returnflag"], finalize, schema)
+    via_disk = merge_sketches(restored, ["l_returnflag"], finalize, schema)
+    direct = merge_sketches(partials, ["l_returnflag"], finalize, schema)
     counts = li.groupBy("l_returnflag").agg(
         F.count("l_extendedprice").alias("n_values")
     )
@@ -601,8 +594,9 @@ SELECT s.g AS l_returnflag,
 FROM s JOIN m ON s.g = m.g
 GROUP BY s.g, m.mu
 """,
-    doc="Grouped single-pass Pébay moments sketch (crick SummaryStats per "
-    "group) — exact algorithm, hash-matches two-pass oracle after rounding.",
+    doc="Grouped single-pass moments (crick SummaryStats per group) through "
+    "moments_agg's one JVM aggregate — exact algorithm, hash-matches the "
+    "two-pass oracle after rounding.",
 )
 def moments_sketch_by_returnflag(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
@@ -610,13 +604,10 @@ def moments_sketch_by_returnflag(spark, sf_dir):
     return out.select(
         "l_returnflag",
         "cnt",
-        F.round("sum_x", 2).alias("sum_x"),
-        F.round("min_x", 6).alias("min_x"),
-        F.round("max_x", 6).alias("max_x"),
-        F.round("mean_x", 6).alias("mean_x"),
-        F.round("var_pop_x", 6).alias("var_pop_x"),
-        F.round("skew_x", 5).alias("skew_x"),
-        F.round("kurt_x", 5).alias("kurt_x"),
+        *rounded(
+            {"sum_x": 2, "min_x": 6, "max_x": 6, "mean_x": 6, "var_pop_x": 6,
+             "skew_x": 5, "kurt_x": 5}
+        ),
     )
 
 
@@ -736,9 +727,7 @@ def moments_persist_roundtrip(spark, sf_dir):
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    from crick_spark.operators.crick_ops import _MOMENTS_FIELDS
     from crick_spark.operators.sketch_agg import merge_sketches, partial_sketches
     from crick_spark.sketches import Moments
 
@@ -751,26 +740,15 @@ def moments_persist_roundtrip(spark, sf_dir):
     path = run_tmpdir("crick_moments_") + "/moments.parquet"
     partials.write.mode("overwrite").parquet(path)
     restored = spark.read.parquet(path)
-    schema = StructType([StructField(n, t) for n, t in _MOMENTS_FIELDS])
+    # Moments.finalize() emits moments_agg's struct, so its (unexecuted)
+    # plan supplies the field names and types
+    schema = moments_agg(li, "l_extendedprice").schema
 
     def finalize(sk: Moments) -> pd.DataFrame:
         return pd.DataFrame([sk.finalize()])
 
     out = merge_sketches(restored, ["l_returnflag"], finalize, schema)
-    return out.select(
-        "l_returnflag",
-        "cnt",
-        F.round("sum_x", 1).alias("sum_x"),
-        F.round("min_x", 6).alias("min_x"),
-        F.round("max_x", 6).alias("max_x"),
-        F.round("mean_x", 5).alias("mean_x"),
-        F.round("var_pop_x", 1).alias("var_pop_x"),
-        F.round("var_samp_x", 1).alias("var_samp_x"),
-        F.round("std_pop_x", 4).alias("std_pop_x"),
-        F.round("std_samp_x", 4).alias("std_samp_x"),
-        F.round("skew_x", 5).alias("skew_x"),
-        F.round("kurt_x", 5).alias("kurt_x"),
-    )
+    return out.select("l_returnflag", "cnt", *rounded(_PRICE_DIGITS))
 
 
 @register(
@@ -882,7 +860,7 @@ def incremental_sketch_merge(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from crick_spark.operators.crick_ops import tdigest_agg, tdigest_merge_finalize
+    from crick_spark.operators import merge_sketches, tdigest_agg
 
     ev = load_table(spark, sf_dir, "events")
     base = ev.where(F.col("event_id") % 2 == 0)
@@ -915,7 +893,7 @@ def incremental_sketch_merge(spark, sf_dir):
               "mass": float(sk.size())}]
         )
 
-    refreshed = tdigest_merge_finalize(td_merged_in, ["event_type"], finalize, schema)
+    refreshed = merge_sketches(td_merged_in, ["event_type"], finalize, schema)
 
     hll_state = spark.read.parquet(hll_path)
     hll_delta = delta.groupBy("event_type").agg(

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    BinaryType,
     DoubleType,
     LongType,
     StringType,
@@ -31,8 +32,8 @@ from pyspark.sql.types import (
 from crick_spark.operators.crick_ops import _qname
 from crick_spark.sketches import SpaceSaving, TDigest, codec
 
-# State value: the hex of the key's encoded sketch.
-STATE_SCHEMA = StructType([StructField("blob", StringType())])
+# State value: the key's encoded sketch.
+STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 TOPK_SCHEMA = StructType(
     [
         StructField("key", StringType()),
@@ -45,18 +46,18 @@ TOPK_SCHEMA = StructType(
 
 
 def fold_tdigest(
-    state: str | None,
+    state: bytes | None,
     pdfs: Iterable[pd.DataFrame],
     key: Any,
     value_col: str,
     qs: Iterable[float],
     compression: float,
-) -> tuple[str, pd.DataFrame]:
+) -> tuple[bytes, pd.DataFrame]:
     """One key's micro-batch: fold ``pdfs`` into the state digest (a fresh
     one when ``state`` is None); returns the new state value and the
     (key, n, p…) row."""
     digest = (
-        codec.loads(bytes.fromhex(state))
+        codec.loads(state)
         if state is not None
         else TDigest(compression=compression)
     )
@@ -68,21 +69,21 @@ def fold_tdigest(
         )
     row = {"key": key, "n": int(digest.size())}
     row.update({_qname(q): float(digest.quantile(q)) for q in qs})
-    return codec.dumps(digest).hex(), pd.DataFrame([row])
+    return codec.dumps(digest), pd.DataFrame([row])
 
 
 def fold_spacesaving(
-    state: str | None,
+    state: bytes | None,
     pdfs: Iterable[pd.DataFrame],
     key: Any,
     item_col: str,
     k: int,
     capacity: int,
-) -> tuple[str, pd.DataFrame]:
+) -> tuple[bytes, pd.DataFrame]:
     """One key's micro-batch: fold ``pdfs`` into the state Space-Saving
     summary; returns the new state value and the ``TOPK_SCHEMA`` rows."""
     sk = (
-        codec.loads(bytes.fromhex(state))
+        codec.loads(state)
         if state is not None
         else SpaceSaving(capacity=capacity)
     )
@@ -98,10 +99,10 @@ def fold_spacesaving(
             "error": [t[2] for t in top],
         }
     )
-    return codec.dumps(sk).hex(), out
+    return codec.dumps(sk), out
 
 
-def _group_state_update(fold: Callable[..., tuple[str, pd.DataFrame]], *args: Any):
+def _group_state_update(fold: Callable[..., tuple[bytes, pd.DataFrame]], *args: Any):
     """The ``applyInPandasWithState`` body around a ``fold_*``: read the
     key's state, fold the batch, store the new state, emit."""
 

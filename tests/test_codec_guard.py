@@ -6,10 +6,11 @@ in ``operators.sketch_agg`` and calls the kernels' ``.merge`` directly.
 Every bounded driver collect goes through ``crick_spark.driver_close``,
 and connected components has one union-find (``min_root_labels``) and
 one distributed algorithm.  Streaming sketch state has one state API
-(``applyInPandasWithState``) and ``ClusterStore`` two fold tiers.  These
-checks read the source (AST, so
-docstrings and comments are fine) and fail if a decision starts
-spreading again."""
+(``applyInPandasWithState``) and ``ClusterStore`` two fold tiers.
+SummaryStats has one expression list (``functions.stats``), and the
+operators reach it without the ``Moments`` kernel.  These checks read the
+source (AST, so docstrings and comments are fine) and fail if a decision
+starts spreading again."""
 
 from __future__ import annotations
 
@@ -29,6 +30,7 @@ RETIRED_TIERS = {
     "_fold_initial",
 }
 RETIRED_MODULES = ("streaming/tws_state.py",)
+STATS = Path("functions") / "stats.py"
 
 
 def _name(node) -> str | None:
@@ -186,6 +188,54 @@ def test_retired_tier_guard_catches_offences(tmp_path):
         "a.py:2 uses transformWithStateInPandas",
         "a.py:3 uses _fold_initial",
         "a.py:5 uses _fold_driver",
+    ]
+
+
+def _summary_stats_offences(root: Path) -> list[str]:
+    """``skewness``/``kurtosis`` calls outside ``functions/stats.py`` (a
+    hand-copied SummaryStats list) and any ``Moments`` name under
+    ``operators/`` (SummaryStats through the kernel instead of the JVM
+    aggregate)."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                rel != STATS
+                and isinstance(node, ast.Call)
+                and _name(node.func) in ("skewness", "kurtosis")
+            ):
+                found.append(f"{rel}:{node.lineno} calls {_name(node.func)}")
+            if rel.parts[0] == "operators" and _name(node) == "Moments":
+                found.append(f"{rel}:{node.lineno} uses Moments")
+    return found
+
+
+def test_one_summary_stats_implementation():
+    bad = _summary_stats_offences(PKG)
+    assert not bad, f"SummaryStats computed outside functions/stats.py: {bad}"
+
+
+def test_summary_stats_guard_catches_offences(tmp_path):
+    (tmp_path / "functions").mkdir()
+    (tmp_path / "functions" / "stats.py").write_text("k = F.kurtosis(c)\n")
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "operators" / "ops.py").write_text(
+        '"""Moments in a docstring is fine"""\n'
+        "from crick_spark.sketches import Moments\n"
+        "m = Moments.from_values(x)\n"
+    )
+    (tmp_path / "plans.py").write_text(
+        "from crick_spark.sketches import Moments\n"
+        "g = F.skewness(x)\n"
+        "k = kurtosis(x)\n"
+    )
+    assert _summary_stats_offences(tmp_path) == [
+        "operators/ops.py:2 uses Moments",
+        "operators/ops.py:3 uses Moments",
+        "plans.py:2 calls skewness",
+        "plans.py:3 calls kurtosis",
     ]
 
 

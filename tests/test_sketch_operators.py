@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crick_spark.operators import (
+    merge_sketches,
     moments_agg,
     spacesaving_topk,
     tdigest_agg,
@@ -21,7 +22,6 @@ from crick_spark.operators import (
     tdigest_histogram,
     tdigest_quantiles,
 )
-from crick_spark.operators.crick_ops import tdigest_merge_finalize
 from crick_spark.sources.tables import load_table
 from tests.conftest import SF_SMALL
 
@@ -122,7 +122,7 @@ def test_tdigest_sketch_persistence_roundtrip(spark, lineitem, tmp_path):
     tdigest_agg(lineitem, "l_extendedprice", by=["l_returnflag"]).write.parquet(path)
     persisted = spark.read.parquet(path)
     schema = StructType([StructField("p0_5", DoubleType())])
-    out = tdigest_merge_finalize(
+    out = merge_sketches(
         persisted,
         ["l_returnflag"],
         lambda sk: pd.DataFrame([{"p0_5": float(sk.quantile(0.5))}]),
@@ -206,16 +206,88 @@ def test_moments_grouped(spark, lineitem):
     assert out.count() == lineitem.select("l_returnflag", "l_linestatus").distinct().count()
 
 
+def _kernel_stats(xs) -> dict:
+    """The Moments kernel's SummaryStats with NaN read as NULL."""
+    from crick_spark.sketches import Moments
+
+    out = Moments.from_values(np.asarray(xs, dtype=np.float64)).finalize()
+    return {k: None if isinstance(v, float) and math.isnan(v) else v for k, v in out.items()}
+
+
+def _assert_stats_equal(got: dict, want: dict, ctx) -> None:
+    for k, w in want.items():
+        g = got[k]
+        if w is None or g is None:
+            assert g is w, (ctx, k, g, w)
+        else:
+            assert math.isclose(g, w, rel_tol=1e-9, abs_tol=1e-12), (ctx, k, g, w)
+
+
+def test_moments_agg_matches_kernel_on_edge_groups(spark):
+    """moments_agg ≡ the Moments kernel (NaN read as NULL) on groups that
+    are all NaN, single-row, constant, NaN-mixed, ordinary and int-typed;
+    plus the two places the JVM aggregate differs from the kernel."""
+    nan, inf = float("nan"), float("inf")
+    groups = {
+        "all_nan": [nan, nan, nan],
+        "single": [5.0],
+        "constant": [3.5] * 6,
+        "nan_mixed": [1.0, nan, 2.0, 4.0, nan, 8.0],
+        "ordinary": [1.0, 2.0, 3.0, 10.0, -4.0, 0.5, 7.25],
+    }
+    df = spark.createDataFrame(
+        [(g, x) for g, xs in groups.items() for x in xs], "g string, x double"
+    )
+    got = {r["g"]: r.asDict() for r in moments_agg(df, "x", by=["g"]).collect()}
+    assert set(got) == set(groups)
+    for g, xs in groups.items():
+        _assert_stats_equal(got[g], _kernel_stats(xs), g)
+
+    ints = [3, 1, 4, 1, 5, 9, 2, 6]
+    idf = spark.createDataFrame([(x,) for x in ints], "x bigint")
+    out = moments_agg(idf, "x")
+    assert {f.name: f.dataType.simpleString() for f in out.schema.fields} == {
+        "cnt": "bigint", **{k: "double" for k in _kernel_stats([1.0]) if k != "cnt"}
+    }
+    _assert_stats_equal(out.collect()[0].asDict(), _kernel_stats(ints), "int")
+
+    # a group holding +inf or -inf: the kernel's finalize yields NULL for
+    # var/std/skew/kurt, the JVM aggregate NaN; count/sum/min/max/mean agree
+    spread = ("var_pop_x", "var_samp_x", "std_pop_x", "std_samp_x", "skew_x", "kurt_x")
+    for xs in ([1.0, inf, 2.0], [-inf, 3.0, 4.0, 3.0]):
+        row = moments_agg(
+            spark.createDataFrame([(x,) for x in xs], "x double"), "x"
+        ).collect()[0].asDict()
+        want = _kernel_stats(xs)
+        for k in spread:
+            assert want[k] is None and math.isnan(row[k]), (xs, k)
+        _assert_stats_equal(
+            {k: v for k, v in row.items() if k not in spread},
+            {k: v for k, v in want.items() if k not in spread},
+            xs,
+        )
+
+    # keyless empty input: one row with cnt = 0 (the kernel path gave none)
+    empty = moments_agg(spark.createDataFrame([], "x double"), "x").collect()
+    assert len(empty) == 1 and empty[0]["cnt"] == 0
+    assert all(v is None for k, v in empty[0].asDict().items() if k != "cnt")
+
+
+def test_moments_agg_plan_has_no_python_node(spark, lineitem):
+    """One JVM hash aggregate: no Arrow/pandas crossing in the plan."""
+    for by in (None, ["l_returnflag"]):
+        df = moments_agg(lineitem, "l_quantity", by=by)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "HashAggregate" in plan, plan
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython"):
+            assert node not in plan, plan
+
+
 def test_tdigest_persist_roundtrip_equals_direct(spark, tmp_path):
     """Persisted-then-merged digests ≡ directly aggregated digests."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from crick_spark.operators.crick_ops import (
-        tdigest_agg,
-        tdigest_merge_finalize,
-        tdigest_quantiles,
-    )
     from crick_spark.sources.tables import load_table
 
     li = load_table(spark, SF_SMALL, "lineitem")
@@ -238,7 +310,7 @@ def test_tdigest_persist_roundtrip_equals_direct(spark, tmp_path):
               zip(("p0_25", "p0_5", "p0_99"), (0.25, 0.5, 0.99))}]
         )
 
-    restored = tdigest_merge_finalize(
+    restored = merge_sketches(
         spark.read.parquet(path), ["l_returnflag"], finalize, schema
     )
     got = {r.l_returnflag: (r.p0_25, r.p0_5, r.p0_99) for r in restored.collect()}
@@ -475,14 +547,17 @@ def test_spacesaving_persist_roundtrip_equals_direct(spark):
 
 
 def test_moments_persist_roundtrip_equals_direct(spark):
-    """Persist → restore → Pébay merge ≡ direct moments_agg (bit-equal:
-    both paths fold blobs in sorted byte order).  The registered query
-    rounds for its SQL oracle, so the direct path gets the same in-query
-    rounding before comparison."""
-    from pyspark.sql import functions as F
+    """Persist → restore → Pébay merge ≡ the same Moments partials merged
+    in memory (bit-equal: both paths fold blobs in sorted byte order).
+    The registered query rounds for its SQL oracle, so the direct path
+    gets the same in-query rounding before comparison."""
+    import pandas as pd
 
-    from crick_spark.operators.crick_ops import moments_agg
+    from crick_spark.operators import partial_sketches
     from crick_spark.plans import QUERIES
+    from crick_spark.plans.registry import rounded
+    from crick_spark.plans.sketch_queries import _PRICE_DIGITS
+    from crick_spark.sketches import Moments
     from crick_spark.sources.tables import load_table
 
     got = (
@@ -492,18 +567,20 @@ def test_moments_persist_roundtrip_equals_direct(spark):
         .sort_values("l_returnflag", ignore_index=True)
     )
     li = load_table(spark, SF_SMALL, "lineitem")
-    rounds = {
-        "sum_x": 1, "min_x": 6, "max_x": 6, "mean_x": 5, "var_pop_x": 1,
-        "var_samp_x": 1, "std_pop_x": 4, "std_samp_x": 4, "skew_x": 5,
-        "kurt_x": 5,
-    }
-    direct = moments_agg(li, "l_extendedprice", by=["l_returnflag"])
+    partials = partial_sketches(
+        li,
+        lambda pdf: Moments.from_values(pdf["l_extendedprice"].to_numpy(np.float64)),
+        ["l_extendedprice"],
+        ["l_returnflag"],
+    )
+    direct = merge_sketches(
+        partials,
+        ["l_returnflag"],
+        lambda sk: pd.DataFrame([sk.finalize()]),
+        moments_agg(li, "l_extendedprice").schema,
+    )
     want = (
-        direct.select(
-            "l_returnflag",
-            "cnt",
-            *[F.round(c, d).alias(c) for c, d in rounds.items()],
-        )
+        direct.select("l_returnflag", "cnt", *rounded(_PRICE_DIGITS))
         .toPandas()
         .sort_values("l_returnflag", ignore_index=True)
     )

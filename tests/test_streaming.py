@@ -221,6 +221,44 @@ def test_spacesaving_stream_topk_exact_regime(spark):
         assert g["cnt"].min() >= excluded.max(), key
 
 
+def test_sketch_state_carries_across_micro_batches(spark, tmp_path):
+    """Two micro-batches: the second folds into the binary state the first
+    stored, so each key's final digest mass is its full event count."""
+    import pyarrow.parquet as pq
+
+    from crick_spark.sources.tables import normalize_events_ts
+
+    events = pq.read_table(f"{SF_SMALL}/events.parquet")
+    half = events.num_rows // 2
+    pq.write_table(events.slice(0, half), str(tmp_path / "a.parquet"))
+    pq.write_table(events.slice(half), str(tmp_path / "b.parquet"))
+    load_table(spark, SF_SMALL, "events")  # sets the nanos conf
+    sdf = normalize_events_ts(
+        spark.readStream.schema(spark.read.parquet(str(tmp_path)).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path))
+    )
+    sink = f"t_{uuid.uuid4().hex[:8]}"
+    q = (
+        tdigest_stream_quantiles(sdf, "event_type", "value", (0.5,))
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert len(q.recentProgress) == 2
+    final = {
+        r["key"]: r["n"]
+        for r in spark.table(sink).groupBy("key").agg(F.max("n").alias("n")).collect()
+    }
+    counts = events.group_by("event_type").aggregate([("event_type", "count")])
+    assert final == dict(
+        zip(counts["event_type"].to_pylist(), counts["event_type_count"].to_pylist())
+    )
+
+
 def test_incremental_dedup_equals_batch_lsh(spark, tmp_path):
     """The streaming incremental candidate set (4 micro-batches folding
     into a persisted bucket store) must equal the single-batch
